@@ -38,6 +38,7 @@ from log_agent_spark.scratch import (
     pin_checkpoint,
     pin_checkpoint_observed,
     pinned_query,
+    unpin_checkpoint,
 )
 
 from log_agent_spark.sources.tables import load_table
@@ -64,9 +65,10 @@ def connected_components(
     # only dedups within one job, so an unpinned sym re-executes its
     # whole upstream (e.g. the quadratic levenshtein pair join in the
     # dedup consumer) once per round. One materialization, O(rounds)
-    # cache reads; released by the caller's pinned_query wrapper (or
-    # owned by the caller when composed directly, as with Spark's own
-    # persist API).
+    # cache reads; released before returning, so a direct call outside
+    # pinned_query leaves no pins behind but the returned labels (owned by
+    # the caller, as with Spark's own API). Each round's labels checkpoint
+    # is released as soon as the next round's is materialized.
     sym = pin(
         sym.union(
             sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -94,17 +96,20 @@ def connected_components(
         )
         # labels only ever decrease → the sum is a monotone convergence
         # witness; one scalar to the driver per round, no row comparison.
+        prev = labels
         labels, m = pin_checkpoint_observed(
-            labels.unionByName(nbr_min)
+            prev.unionByName(nbr_min)
             .groupBy("node")
             .agg(F.min("comp").alias("comp")),
             F.sum("comp").alias("s"),
         )
+        unpin_checkpoint(prev)
         cur_sum = m["s"]
         if cur_sum == prev_sum:
             converged = True
             break
         prev_sum = cur_sum
+    sym.unpersist()
     if not converged:
         # Min-label propagation needs O(diameter) rounds; exhausting the
         # budget means a component wider than max_iter hops would get a
@@ -1032,17 +1037,25 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # graph is bipartite, so a frontier of customers can only match the
     # cust→supp direction and vice versa: probing the symmetrized union
     # wastes HALF of every level's scan on rows whose src is in the other
-    # id space. Level k alternates direction (the seed = min src is a
-    # customer), each a zero-cost projection over the checkpointed edge
-    # blocks. Collided ids fall back to the symmetrized union — same
-    # rows, no bipartite structure to exploit.
+    # id space. Level k alternates direction starting cust→supp, each a
+    # zero-cost projection over the checkpointed edge blocks, so it also
+    # relies on the observed seed being a customer — checked here, where
+    # the parity is chosen. Collided ids or a non-customer seed fall back
+    # to the symmetrized union — same rows, no bipartite structure to
+    # exploit.
     # (r10 note kept: an explode-both-endpoints form measured +45% here —
     # the union legs read the checkpointed edges, so the 2× union is two
     # cache scans, not two derivations.)
     from log_agent_spark.sources.tables import footer_column_max
 
     max_cust = footer_column_max(sf_dir, "orders", "o_custkey")
-    bipartite = max_cust is not None and max_cust < _SUPP_OFFSET
+    seed = m["seed"]
+    bipartite = (
+        max_cust is not None
+        and max_cust < _SUPP_OFFSET
+        and seed is not None
+        and seed < _SUPP_OFFSET
+    )
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     und = None if bipartite else edges.union(rev).transform(pin)
     # broadcast-size guard from an UPPER BOUND that costs two parquet
@@ -1058,7 +1071,6 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _maybe_bcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
 
-    seed = m["seed"]
     visited = spark.createDataFrame([(seed, 0)], "node bigint, hop int")
     frontier = visited.select("node")
     for k in range(1, BFS_ITERS + 1):

@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.window import Window as W
 
-from log_agent_spark.scratch import pinned_query
 from log_agent_spark.sources.tables import load_table
 
 # Evidence-feature constants shared by the Spark plan and its SQL twins —

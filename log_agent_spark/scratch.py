@@ -129,14 +129,28 @@ def pin_checkpoint(df: DataFrame) -> DataFrame:
     out = df.localCheckpoint(eager=True)
     pins = _ACTIVE_PINS.get()
     if pins is not None:
-        try:
-            jrdd = out._jdf.queryExecution().analyzed().rdd()
-        except Exception:  # noqa: BLE001 — an unreachable handle must fall
-            # back to leaking this one block, never to releasing a wrong one
-            jrdd = None
+        jrdd = _checkpoint_rdd(out)
         if jrdd is not None:
             pins.append(("jrdd", jrdd))
     return out
+
+
+def _checkpoint_rdd(out: DataFrame):
+    """The checkpointed RDD behind a ``pin_checkpoint`` frame, or None."""
+    try:
+        return out._jdf.queryExecution().analyzed().rdd()
+    except Exception:  # noqa: BLE001 — an unreachable handle must fall
+        # back to leaking this one block, never to releasing a wrong one
+        return None
+
+
+def unpin_checkpoint(df: DataFrame) -> None:
+    """Release a ``pin_checkpoint`` frame's blocks now, inside or outside a
+    wrapped query — for an iterative round whose successor is already
+    eagerly checkpointed. The frame is unusable afterwards."""
+    jrdd = _checkpoint_rdd(df)
+    if jrdd is not None:
+        _release([("jrdd", jrdd)])
 
 
 def pin_checkpoint_observed(

@@ -48,6 +48,12 @@ _LOCAL_DEFAULTS = {
     # deep Catalyst plan recursion generally) safe. JVM-launch-time option —
     # a no-op when attaching to an already-running session.
     "spark.driver.extraJavaOptions": "-Xss16m",
+    # Python workers fork from the engine's daemon, which stops PySpark's
+    # per-task importlib.invalidate_caches() from re-parsing pyspark.zip
+    # (~125 ms CPU per Python task; see pyworker.py). Workers import this
+    # package anyway to unpickle the engine's functions. Read when the
+    # SparkContext starts, so a pre-existing session keeps the stock daemon.
+    "spark.python.daemon.module": "log_agent_spark.pyworker",
 }
 
 

@@ -312,3 +312,30 @@ def test_bfs_directional_probes_equal_symmetrized_fallback(spark, monkeypatch):
     )
     slow = sorted(map(tuple, graph.q_graph_bfs_hops(spark, sf).collect()))
     assert fast == slow and len(fast) > 0
+
+
+def test_bfs_non_customer_seed_takes_symmetrized_fallback(spark, sf_dir, monkeypatch):
+    """The direction alternation starts cust->supp, so it holds only for a
+    customer seed: force the observed seed to a supplier node and require
+    the same hop histogram as the forced symmetrized-union path (the
+    unchecked fast path would find no hop-1 neighbours at all)."""
+    from log_agent_spark.operators import graph
+
+    real_observed = graph.pin_checkpoint_observed
+
+    def supplier_seed(df, *metrics):
+        out, m = real_observed(df, *metrics)
+        if "seed" in m:
+            m = {**m, "seed": graph._SUPP_OFFSET + 1}
+        return out, m
+
+    monkeypatch.setattr(graph, "pin_checkpoint_observed", supplier_seed)
+    checked = sorted(map(tuple, graph.q_graph_bfs_hops(spark, sf_dir).collect()))
+    monkeypatch.setattr(
+        "log_agent_spark.sources.tables.footer_column_max",
+        lambda *_a, **_k: graph._SUPP_OFFSET + 1,
+    )
+    union = sorted(map(tuple, graph.q_graph_bfs_hops(spark, sf_dir).collect()))
+    assert checked == union
+    assert [r[0] for r in checked] == list(range(graph.BFS_ITERS + 1))
+    assert checked[0][2] == graph._SUPP_OFFSET + 1  # hop 0 is the seed

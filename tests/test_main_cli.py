@@ -50,6 +50,37 @@ def test_backfill_mode_writes_parquet(tmp_path):
     assert all(r[1] > 0 for r in got)
 
 
+def test_backfill_from_outside_checkout_via_pythonpath(tmp_path):
+    """Python workers fork from the engine daemon (``python -m
+    log_agent_spark.pyworker``); with a cwd outside the checkout the
+    package is found only through PYTHONPATH, and the backfill's
+    mapInPandas/pandas_udf tasks still need the daemon to start."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    watch = str(tmp_path / "watched")
+    _write_tree(watch)
+    ini = str(tmp_path / "agent.ini")
+    _write_ini(ini, watch)
+    out = str(tmp_path / "out")
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-m", "log_agent_spark",
+         "--config", ini, "--mode", "backfill", "--output", out],
+        capture_output=True, text=True, timeout=300,
+        cwd=str(tmp_path), env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    import duckdb
+
+    got = duckdb.sql(
+        f"SELECT name FROM read_parquet('{out}/SPI.CLI/**/*.parquet') "
+        "ORDER BY name"
+    ).fetchall()
+    assert [r[0] for r in got] == ["a.log", "b.log"]
+
+
 def test_stream_mode_copies_files(tmp_path):
     watch = str(tmp_path / "watched")
     _write_tree(watch)

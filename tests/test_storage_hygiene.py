@@ -67,6 +67,25 @@ def test_back_to_back_graph_queries_leave_no_blocks(spark, sf_dir):
         assert not leaked, f"{name} leaked: {leaked}"
 
 
+def test_direct_connected_components_leaves_only_its_result_pinned(spark):
+    """A library call outside pinned_query releases the symmetrized edge
+    list and every superseded round's labels checkpoint; the returned
+    labels' own checkpoint is the only new pin, and the caller owns it."""
+    from log_agent_spark.operators.graph import connected_components
+    from log_agent_spark.scratch import _checkpoint_rdd
+
+    nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "id long")
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (6, 7)], "src long, dst long"
+    )
+    before = _persistent_ids(spark)
+    labels = connected_components(nodes, edges)
+    got = {r["node"]: r["comp"] for r in labels.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6, 7: 6}
+    leaked = _persistent_ids(spark) - before - {_checkpoint_rdd(labels).id()}
+    assert not leaked, f"connected_components leaked: {leaked}"
+
+
 def test_no_raw_pins_in_query_modules():
     """Enforcement for the handle-based release design: a raw .persist()/
     .cache()/.localCheckpoint() inside a query module would compile, run
