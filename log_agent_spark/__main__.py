@@ -66,38 +66,26 @@ def _safe(name: str) -> str:
     return re.sub(r"[^A-Za-z0-9_.-]", "_", name)
 
 
-_BINARY_FILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
-
-
 def _stream_enrich(cfg):
-    """Per-batch M1 enrichment: read ONLY the batch's files (bounded by
-    maxFilesPerTrigger) and hand FileMeta rows to the sink chain — the
-    reference's read-content-on-event hot path (watchdog.go:314-326)."""
+    """Per-batch M1 enrichment: read ONLY the batch's files and hand
+    FileMeta rows to the sink chain — the reference's read-content-on-event
+    hot path (watchdog.go:314-326). A batch holds the keys whose debounce
+    timers fired; no per-trigger cap bounds it (the reference's 100-record
+    batch, watchdog.go:22-27, is not ported).
+
+    Fixed per-batch cost is paid about twice in a file's latency (once for
+    the poll to see the write, once more after the debounce deadline), so
+    the read is byte-sized — one partition for a normal batch, one job per
+    driver-side sink — and a batch with no live file reads nothing and
+    runs no sink job (sources/binary_files.read_binary_files)."""
     from pyspark.sql import functions as F
 
-    from log_agent_spark.sources.binary_files import enrich_file_meta
+    from log_agent_spark.sources.binary_files import enrich_file_meta, read_binary_files
 
     def _t(batch):
         live = batch.filter(F.col("op") != "REMOVE")
         paths = [r.path for r in live.select("path").distinct().collect()]
-        if paths:
-            # ignoreMissingFiles: a file can be unlinked (log rotation)
-            # between the event walk and this read — the Handle404 analog
-            # (file_events_stream.py has the same guard on its side); a
-            # missing file must skip, not kill the standing query
-            raw = (
-                batch.sparkSession.read.format("binaryFile")
-                .option("ignoreMissingFiles", "true")
-                .load(paths)
-            )
-        else:
-            # empty frame with the binaryFile schema: keeps the
-            # post-transform schema identical to non-empty batches (a
-            # schema-sensitive sink must not see a different shape) and
-            # costs nothing — no listing of the watch tree
-            raw = batch.sparkSession.createDataFrame([], _BINARY_FILE_SCHEMA)
+        raw = read_binary_files(batch.sparkSession, paths)
         return cfg.transform(enrich_file_meta(raw, cfg.watch))
 
     return _t

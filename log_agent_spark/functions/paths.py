@@ -7,6 +7,8 @@ over the ``binaryFile`` source's ``_metadata``-style columns.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -66,6 +68,18 @@ def bsi_parse(df: DataFrame, sub_dir_col: str = "sub_dir") -> DataFrame:
     testID's trailing timestamp; file_time (create_time) is overridden by
     folder_time so re-created files keep a stable key (BSI.go:30-32,
     52-54). Non-conforming paths pass through unchanged (BSI.go:46-49)."""
+    cols = dict(_bsi_columns(sub_dir_col))
+    if "create_time" not in df.columns:
+        del cols["create_time"]
+    return df.withColumns(cols)
+
+
+@functools.lru_cache(maxsize=16)
+def _bsi_columns(sub_dir_col: str) -> tuple[tuple[str, Column], ...]:
+    """bsi_parse's (name, column) pairs, built once per column name: they
+    are unresolved and session-free, and building them over py4j costs more
+    than a live micro-batch's whole read (each use still gets fresh
+    expression ids)."""
     segs = F.split(F.col(sub_dir_col), "/")
     n = F.size(segs)
     conforms = (n >= 5) & (n <= 6)
@@ -80,15 +94,11 @@ def bsi_parse(df: DataFrame, sub_dir_col: str = "sub_dir") -> DataFrame:
     folder_time = F.when(
         conforms & (ts_str != ""), F.to_timestamp(ts_str, BSI_TIME_FMT)
     ).otherwise(F.lit(None).cast("timestamp"))
-    out = (
-        df.withColumn("bsi_family", F.when(conforms, F.element_at(segs, 1)))
-        .withColumn("bsi_model", F.when(conforms, F.element_at(segs, 2)))
-        .withColumn("bsi_test_id", test_id)  # already conforms-guarded
-        .withColumn("folder_time", folder_time)
-    )
-    if "create_time" in df.columns:
+    return (
+        ("bsi_family", F.when(conforms, F.element_at(segs, 1))),
+        ("bsi_model", F.when(conforms, F.element_at(segs, 2))),
+        ("bsi_test_id", test_id),  # already conforms-guarded
+        ("folder_time", folder_time),
         # M4 business-time override (BSI.go:52-54)
-        out = out.withColumn(
-            "create_time", F.coalesce(folder_time, F.col("create_time"))
-        )
-    return out
+        ("create_time", F.coalesce(folder_time, F.col("create_time"))),
+    )

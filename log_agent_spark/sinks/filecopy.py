@@ -6,11 +6,15 @@ source's mtime on the copy (Chtimes, file.go:79-88).
 
 Spark-first shape: ``foreachPartition``-style distributed writes via
 ``mapInPandas`` would shuffle content through Python; instead the batch
-volume here is the micro-batch (bounded), so a driver-side loop over
-``toLocalIterator`` keeps memory at one-row-at-a-time while the upstream
-plan (the expensive part) stays distributed. For cluster-scale fan-out to a
-shared filesystem, swap in ``df.write.format('binaryFile')``-less
-per-partition writers; the sink interface (sinks/multi.py) is unchanged.
+volume here is the micro-batch, so a driver-side loop over
+``toLocalIterator`` writes the rows while the upstream plan stays
+distributed. ``toLocalIterator`` runs one job per partition and holds one
+whole partition in driver memory at a time, so the frame's partitioning
+sets both the job count and the driver's footprint: the live path's read
+(sources/binary_files.read_binary_files) sizes its partitions by bytes for
+that reason. For cluster-scale fan-out to a shared filesystem, swap in
+``df.write.format('binaryFile')``-less per-partition writers; the sink
+interface (sinks/multi.py) is unchanged.
 """
 
 from __future__ import annotations

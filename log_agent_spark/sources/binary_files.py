@@ -15,12 +15,33 @@ and let business transforms override.
 
 from __future__ import annotations
 
+import functools
+import math
+import os
 import socket
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from log_agent_spark.functions.paths import extension, filename, folder, sub_dir
+
+# the binaryFile source's row shape, as its reads report it (all nullable)
+BINARY_FILE_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("modificationTime", TimestampType()),
+        StructField("length", LongType()),
+        StructField("content", BinaryType()),
+    ]
+)
 
 
 def read_binary_tree(
@@ -74,15 +95,6 @@ def _empty_file_rows(spark: SparkSession, root: str, glob: str | None) -> DataFr
     import datetime as dt
     import fnmatch
 
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(root)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -101,23 +113,77 @@ def _empty_file_rows(spark: SparkSession, root: str, glob: str | None) -> DataFr
             st.getModificationTime() / 1000.0, tz=dt.timezone.utc
         ).replace(tzinfo=None)
         rows.append((st.getPath().toString(), mtime, 0, bytearray(b"")))
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
+    return spark.createDataFrame(rows, BINARY_FILE_SCHEMA)
+
+
+def read_binary_files(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """binaryFile rows for a list of local files, read as few partitions
+    as their bytes need — the live path's per-batch read
+    (watchdog.go:314-326).
+
+    - A file that no longer exists is skipped: log rotation can unlink it
+      between its event and this read (the Handle404 analog,
+      watchdog.go:394-409). ``ignoreMissingFiles`` covers only files that
+      vanish after the listing; a missing path fails the listing itself with
+      PATH_NOT_FOUND, so the paths are stat-ed first and, when one vanishes
+      between the stat and the listing, stat-ed again.
+    - The scan is coalesced to ceil(bytes / spark.sql.files.maxPartitionBytes)
+      partitions. Split by openCostInBytes, a few small files would spread
+      over one partition per core, and each driver-side consumer
+      (toLocalIterator, show) runs one job per partition; the bound keeps
+      each partition about as large as the scan's own splits, so a large
+      catch-up batch still reaches the driver a bounded piece at a time.
+    - With no file left, the frame has the binaryFile schema and no
+      partitions, so actions on it run no job.
+    """
+    from pyspark.errors import AnalysisException
+
+    present = _file_sizes(paths)
+    while present:
+        try:
+            raw = (
+                spark.read.format("binaryFile")
+                .option("ignoreMissingFiles", "true")
+                .load(list(present))
+            )
+        except AnalysisException as exc:
+            still = _file_sizes(present)
+            if exc.getCondition() != "PATH_NOT_FOUND" or len(still) == len(present):
+                raise
+            present = still
+            continue
+        max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        return raw.coalesce(max(1, math.ceil(sum(present.values()) / max_bytes)))
+    return spark.range(0).select(
+        *(F.lit(None).cast(f.dataType).alias(f.name) for f in BINARY_FILE_SCHEMA)
     )
-    return spark.createDataFrame(rows, schema)
+
+
+def _file_sizes(paths) -> dict[str, int]:
+    """path → size in bytes for the paths that still exist."""
+    sizes = {}
+    for p in paths:
+        try:
+            sizes[p] = os.stat(p).st_size
+        except (FileNotFoundError, NotADirectoryError):
+            continue
+    return sizes
 
 
 def enrich_file_meta(df: DataFrame, root: str, host: str | None = None) -> DataFrame:
     """M1 metadata enrichment: binaryFile columns → FileMeta columns."""
-    host = host or socket.gethostname()
+    return df.select(*_file_meta_columns(root, host or socket.gethostname()))
+
+
+@functools.lru_cache(maxsize=16)
+def _file_meta_columns(root: str, host: str) -> tuple[Column, ...]:
+    """enrich_file_meta's projection, built once per (root, host): the
+    expressions are unresolved and session-free, and rebuilding them over
+    py4j on every live micro-batch cost more than the batch's read (each
+    use still gets fresh expression ids)."""
     path_clean = F.regexp_replace(F.col("path"), "^file:", "")
     rel = sub_dir(path_clean, F.lit(root))
-    return df.select(
+    return (
         path_clean.alias("filepath"),
         F.lit("").alias("pack"),
         rel.alias("sub_dir"),
@@ -128,4 +194,5 @@ def enrich_file_meta(df: DataFrame, root: str, host: str | None = None) -> DataF
         F.col("modificationTime").alias("modify_time"),
         F.col("content"),
         F.lit(host).alias("host"),
-    ).withColumn("folder", folder(F.col("sub_dir")))
+        folder(rel).alias("folder"),
+    )

@@ -11,8 +11,10 @@ process → multi-sink → state commit — as one Structured Streaming query:
             MultiSink fan-out (K6 priority order, fail-fast)
         # checkpoint commit AFTER foreachBatch success = K8 ordering, free
 
-Rate limiting (T6 backpressure) = maxFilesPerTrigger; the 200 ms batch tick
-(T2, watchdog.go:164) = processingTime trigger.
+The 200 ms batch tick (T2, watchdog.go:164) = processingTime trigger. No
+per-trigger cap exists: a micro-batch holds every key whose debounce timer
+fired, and the reference's 100-record batch bound (T2/T6 backpressure,
+watchdog.go:22-27) is not ported.
 """
 
 from __future__ import annotations

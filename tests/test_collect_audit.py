@@ -26,8 +26,8 @@ ALLOWED = {
         "(never the whole frame in memory); the executor-side DataSource "
         "twin (filecopy_datasource.py) is the scale path",
     ("__main__.py", 'live.select("path").distinct().collect()'):
-        "CLI convenience listing of WATCHED PATHS (config-scale, not "
-        "data-scale)",
+        "the micro-batch's debounced paths (strings only, no content) — "
+        "bounded by the keys whose debounce timers fired in that batch",
 }
 
 _PATTERN = re.compile(r"\.collect\(\)|\.toPandas\(\)|\.toLocalIterator\(\)")

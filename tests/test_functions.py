@@ -4,6 +4,7 @@ envelope bytes, key construction (SURVEY.md §2.4 M5-M12 parity)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import gzip
 import hashlib
 import io
@@ -308,3 +309,23 @@ def test_bsi_parse_directory_segment_window(spark):
     assert got["depth3"].folder_time is None
     assert got["depth6"].bsi_test_id is None
     assert got["top"].bsi_test_id is None
+
+    # the expressions are built once and reused: a second, differently
+    # shaped frame (with the create_time override) gets the same per-row
+    # results, and create_time takes folder_time only where one parsed
+    from log_agent_spark.functions import paths
+
+    hits = paths._bsi_columns.cache_info().hits
+    fallback = dt.datetime(2020, 1, 1)
+    df2 = spark.createDataFrame(
+        [(tag, sub, fallback) for sub, tag in reversed(rows)],
+        "tag string, sub_dir string, create_time timestamp",
+    )
+    again = {r.tag: r for r in bsi_parse(df2).collect()}
+    assert paths._bsi_columns.cache_info().hits > hits
+    for tag, r in got.items():
+        a = again[tag]
+        assert (a.bsi_family, a.bsi_model, a.bsi_test_id, a.folder_time) == (
+            r.bsi_family, r.bsi_model, r.bsi_test_id, r.folder_time
+        )
+        assert a.create_time == (r.folder_time or fallback)

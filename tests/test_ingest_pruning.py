@@ -102,7 +102,7 @@ def test_zero_byte_files_are_ingested(spark, tmp_path):
     """binaryFile cannot plan splits for 0-byte files; the listing-recovery
     pass must surface them — the reference ships empty files (the '0x' wire
     convention exists for exactly this, kafka.go:323-325)."""
-    from log_agent_spark.sources.binary_files import read_binary_tree
+    from log_agent_spark.sources.binary_files import enrich_file_meta, read_binary_tree
 
     tree = tmp_path / "tree"
     (tree / "sub").mkdir(parents=True)
@@ -120,3 +120,15 @@ def test_zero_byte_files_are_ingested(spark, tmp_path):
     # glob applies to recovered empties exactly like pathGlobFilter
     only_log = read_binary_tree(spark, str(tree), glob="*.log")
     assert only_log.count() == 2
+
+    # FileMeta enrichment reuses its once-built projection across frames
+    # of one root, and a second root gets its own
+    for frame in (df, only_log):
+        meta = {r.filename: r for r in enrich_file_meta(frame, str(tree), "h").collect()}
+        assert set(meta) == {"empty.log", "full.log"}
+        full = meta["full.log"]
+        assert (full.filepath, full.sub_dir, full.folder, full.ext, full.size, full.host) == (
+            str(tree / "sub" / "full.log"), "sub/full.log", "sub", "log", 1, "h"
+        )
+    sub = enrich_file_meta(df, str(tree / "sub"), "h").select("sub_dir", "folder")
+    assert sorted(sub.collect()) == [("empty.log", ""), ("full.log", "")]

@@ -143,3 +143,42 @@ def test_event_pipeline_end_to_end(spark, tmp_path):
         assert sum(committed) == sum(len(r) for r in seen)
     finally:
         q.stop()
+
+
+def test_file_deleted_inside_its_window_leaves_query_running(spark, tmp_path):
+    """Handle404 parity through the agent's stream wiring: a file rotated
+    away before its debounce timer fires is skipped by the batch's read;
+    the query stays up and the batch's other file is still copied."""
+    from log_agent_spark.__main__ import _stream_enrich
+    from log_agent_spark.config import BizConfig, read_file_events
+    from log_agent_spark.sinks.filecopy import file_copy_sink
+
+    watch = tmp_path / "watched"
+    watch.mkdir()
+    (watch / "keep.log").write_bytes(b"kept")
+    (watch / "rotated.log").write_bytes(b"gone")
+    dest = tmp_path / "dest"
+    cfg = BizConfig(name="SPI.TEST", watch=str(watch), debounce_ms=3000)
+    q = run_event_pipeline(
+        read_file_events(spark, cfg),
+        MultiSink([file_copy_sink(str(dest))]),
+        transform=_stream_enrich(cfg),
+        debounce_ms=cfg.debounce_ms,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        deadline = time.time() + 90
+        while time.time() < deadline and not any(
+            p["numInputRows"] for p in q.recentProgress
+        ):
+            time.sleep(0.1)
+        # both CREATE events are in debounce state; unlink one inside its
+        # 3 s window
+        (watch / "rotated.log").unlink()
+        while time.time() < deadline and q.isActive and not (dest / "keep.log").exists():
+            time.sleep(0.5)
+        assert q.isActive, q.exception()
+        assert (dest / "keep.log").read_bytes() == b"kept"
+        assert not (dest / "rotated.log").exists()
+    finally:
+        q.stop()
