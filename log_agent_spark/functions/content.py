@@ -13,6 +13,7 @@ Reference parity:
 - gzip level     = BestSpeed (=1)                  compress.go:32
 - hex-blob wire  = '0x' + lowercase hex; empty → '0x'   kafka.go:323-325
 - GBK transcode  = invalid-UTF8 names decoded as GBK    handler.go:48-56
+                   (zip member names: ziputil._decode_name)
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ import gzip
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType
+from pyspark.sql.types import BinaryType
 
 GZIP_MIN_LENGTH = 1024  # compress.go:15
 NEVER_COMPRESS_EXT = r"(jpg|jpeg|gif|png|wmv|flv|zip|gz)$"  # compress.go:11
@@ -76,26 +77,6 @@ def gzip_compress(content: pd.Series) -> pd.Series:
         if b is None
         else gzip.compress(bytes(b), compresslevel=1, mtime=0)
     )
-
-
-@F.pandas_udf(StringType())
-def decode_gbk_if_needed(name: pd.Series) -> pd.Series:
-    """GBK→UTF-8 transcode for byte-strings that aren't valid UTF-8 — M6.
-
-    Mirrors handler.go:48-56: try UTF-8 first; on failure decode as GBK.
-    Input arrives as a binary column (raw name bytes).
-    """
-
-    def _dec(b: object) -> str | None:
-        if b is None:
-            return None
-        raw = bytes(b)
-        try:
-            return raw.decode("utf-8")
-        except UnicodeDecodeError:
-            return raw.decode("gbk", errors="replace")
-
-    return name.map(_dec)
 
 
 def apply_compression(size: Column, ext: Column, content: Column) -> dict[str, Column]:

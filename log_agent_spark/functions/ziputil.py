@@ -22,7 +22,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def _decode_name(info: zipfile.ZipInfo) -> str:
@@ -35,59 +34,6 @@ def _decode_name(info: zipfile.ZipInfo) -> str:
         return raw.decode("utf-8")
     except UnicodeDecodeError:
         return raw.decode("gbk", errors="replace")
-
-
-def explode_zip_entries(
-    df: DataFrame,
-    content_col: str = "content",
-    pack_col: str = "filename",
-    keep_cols: list[str] | None = None,
-) -> DataFrame:
-    """Explode zip blobs into member rows.
-
-    Output schema = keep_cols + (pack, entry_name, entry_size, entry_content).
-    Non-zip / unreadable blobs produce zero rows (reference drops them with
-    an error log, kafka.go:210-216).
-    """
-    keep_cols = keep_cols or []
-    in_cols = list(dict.fromkeys(keep_cols + [pack_col, content_col]))
-    src = df.select(*in_cols)
-
-    keep_fields = [
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name in keep_cols
-    ]
-    out_schema = ", ".join(
-        keep_fields
-        + ["pack string", "entry_name string", "entry_size long", "entry_content binary"]
-    )
-
-    def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for _, row in pdf.iterrows():
-                blob = row[content_col]
-                if blob is None:
-                    continue
-                try:
-                    zf = zipfile.ZipFile(io.BytesIO(bytes(blob)))
-                    infos = zf.infolist()
-                except zipfile.BadZipFile:
-                    continue  # kafka.go:210-216: invalid/empty zip → dropped
-                for info in infos:
-                    if info.is_dir():  # kafka.go:230-232
-                        continue
-                    rec = {k: row[k] for k in keep_cols}
-                    rec["pack"] = row[pack_col]
-                    rec["entry_name"] = _decode_name(info)
-                    rec["entry_size"] = info.file_size
-                    rec["entry_content"] = zf.read(info)
-                    rows.append(rec)
-            cols = keep_cols + ["pack", "entry_name", "entry_size", "entry_content"]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(_explode, schema=out_schema)
 
 
 def with_zip_members(df: DataFrame) -> DataFrame:

@@ -13,8 +13,8 @@ Scale (100 TB intent): the eval split is the SMALL side by construction
 broadcast and the training side never shuffles on n-grams — the only wide
 stage is the per-doc hit count, which partial-aggregates map-side. The
 snapshot diff is a single full-outer join on the snapshot key; at scale
-both snapshots arrive pre-bucketed on doc_id (sources/layout.py) so the
-join needs no exchange.
+both snapshots arrive pre-bucketed on doc_id (DataFrameWriter.bucketBy) so
+the join needs no exchange.
 """
 
 from __future__ import annotations

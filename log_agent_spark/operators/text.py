@@ -735,7 +735,7 @@ GROUP BY doc_id
 # POSTING_CAP postings (sorted doc_ids). One (doc_id, term)-distinct
 # explode then one shuffle on term; collect_set is bounded per term by the
 # slice cap downstream, and at 100 TB the index is written bucketed by
-# term (sources/layout.py) so lookups are single-bucket reads. Arrays are
+# term (DataFrameWriter.bucketBy) so lookups are single-bucket reads. Arrays are
 # deterministic: sort_array over a set, capped by position.
 # ---------------------------------------------------------------------------
 POSTING_CAP = 20

@@ -59,8 +59,8 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sliding window aggregation (batch form of streaming/windows.py
-# sliding_counts): 2-hour windows every hour — each event lands in two.
+# Sliding window aggregation (the batch form of a streaming F.window
+# count): 2-hour windows every hour — each event lands in two.
 # Scale: F.window's slide expansion is a map-side generator (duration/slide
 # rows per input row) feeding the same single partial-agg shuffle as the
 # tumbling case; no self-join against a window-spine table.
@@ -501,8 +501,8 @@ GROUP BY user_id
 
 
 # ---------------------------------------------------------------------------
-# NATIVE session_window (batch form of streaming/windows.py
-# session_collapse), cross-checked against DuckDB's gaps-and-islands SQL —
+# NATIVE session_window (the batch form of a streaming session_window
+# collapse), cross-checked against DuckDB's gaps-and-islands SQL —
 # an oracle for a built-in operator DuckDB doesn't have. Boundary
 # convention: Spark's session is [start, last_ts + gap), so an event at
 # exactly last_ts + gap opens a NEW session — the islands oracle must use
@@ -2044,7 +2044,7 @@ ORDER BY est.q
 # event_type, measures how far behind the per-user running max event-time
 # each arrival is: lateness = max(ts over earlier arrivals of that user)
 # − ts. The report (late share, max and mean depth) is the empirical
-# bound withWatermark needs — streaming/windows.py consumes such delays.
+# bound withWatermark needs — a streaming window or dedup consumes such delays.
 #
 # Scale shape: ONE window over (user_id) partitions ordered by arrival —
 # per-user streams are the natural unit (watermarks act per key) and

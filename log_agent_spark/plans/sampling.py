@@ -686,7 +686,7 @@ GROUP BY e.event_type
 # Training-batch manifest: the cross-modal assembly step — documents joined
 # to their embeddings, quality-filtered, split-assigned, summarized per
 # (split, lang). Scale: doc↔embedding is an equi-join on the shared id (at
-# 100 TB both sides bucketed on it → no exchange, sources/layout.py); the
+# 100 TB both sides bucketed on it → no exchange, DataFrameWriter.bucketBy); the
 # norm is a JVM-side F.aggregate over the array, no Python.
 # ---------------------------------------------------------------------------
 def q_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -985,7 +985,7 @@ FROM ranked GROUP BY shard
 
 # ---------------------------------------------------------------------------
 # Z-order (Morton) clustering: the multi-dimensional data-skipping layout.
-# Range-sorting handles ONE column (sources/layout.py write_sorted); when
+# Range-sorting handles ONE column (repartitionByRange + sortWithinPartitions); when
 # queries filter on two (customer AND date), interleaving the bits of both
 # keys gives every output file a bounded range in BOTH dimensions, so
 # parquet row-group min/max stats prune on either predicate. The z-value

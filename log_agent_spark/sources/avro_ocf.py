@@ -5,8 +5,7 @@ round-trips live in tests/test_formats.py) with the one format this image
 has no jar for: Avro. Rather than gating on the external spark-avro
 package, this module implements the OCF spec (Avro 1.11.1 "Object
 Container Files") in pure Python on the DataSource API — the same
-mechanism as the filecopy sink (sinks/filecopy_datasource.py) and the
-fsnotify live source (sources/file_events_stream.py):
+mechanism as the fsnotify live source (sources/file_events_stream.py):
 
     spark.dataSource.register(AvroOcfDataSource)
     df.write.format("avro_ocf").option("codec", "deflate").save(dir)

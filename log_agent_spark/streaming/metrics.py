@@ -1,16 +1,10 @@
-"""Streaming observability + state-store scaling knobs.
+"""Streaming observability.
 
 - ``BatchMetricsListener``: the reference logs per-batch latency — "Finish N
   tasks in D" (watchdog/watchdog.go:309) — and queue depths. The Spark-native
   form is a ``StreamingQueryListener`` over query progress events: rows/sec,
   batch duration, and state-operator metrics arrive for free, per query, with
   no instrumentation in the pipeline itself.
-
-- ``use_rocksdb_state``: at 100 TB-scale streaming (millions of debounce
-  keys, big stream-stream join state) the default in-memory (HDFS-backed)
-  state store holds every key in executor heap; RocksDB spills to local disk
-  and checkpoints incrementally — the provider Spark ships for exactly this.
-  One conf, read at query start.
 """
 
 from __future__ import annotations
@@ -18,17 +12,7 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def use_rocksdb_state(spark: SparkSession) -> None:
-    """Switch subsequently-started streaming queries to RocksDB state."""
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
 
 
 @dataclass

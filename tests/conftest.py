@@ -31,23 +31,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
-
-
-
-@pytest.fixture()
-def rocksdb_state_store(spark):
-    """Set the RocksDB state-store provider for one test, restoring the
-    prior provider (or unsetting) afterwards — shared by every
-    transformWithState / stateful-streaming test."""
-    from log_agent_spark.streaming.metrics import ROCKSDB_PROVIDER
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)

@@ -22,9 +22,9 @@ ALLOWED = {
         "distinct partition VALUES of one micro-batch — bounded by the "
         "partition-key cardinality (dates), never by row count",
     ("sinks/filecopy.py", "df.toLocalIterator()"):
-        "K3 driver-side file-copy form streams one partition at a time "
-        "(never the whole frame in memory); the executor-side DataSource "
-        "twin (filecopy_datasource.py) is the scale path",
+        "K3 driver-side file copy, the one file-copy sink: streams one "
+        "partition at a time (never the whole frame in memory), and the "
+        "live read sizes a batch to one partition per maxPartitionBytes",
     ("__main__.py", 'live.select("path").distinct().collect()'):
         "the micro-batch's debounced paths (strings only, no content) — "
         "bounded by the keys whose debounce timers fired in that batch",

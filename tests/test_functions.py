@@ -23,7 +23,7 @@ from pyspark.sql.types import (
 
 from log_agent_spark.functions import content as C
 from log_agent_spark.functions import envelope as E
-from log_agent_spark.functions.ziputil import explode_zip_entries, with_zip_members
+from log_agent_spark.functions.ziputil import with_zip_members
 
 
 def _zip_bytes(entries: dict[str, bytes], with_dir: bool = False) -> bytes:
@@ -39,34 +39,35 @@ def _zip_bytes(entries: dict[str, bytes], with_dir: bool = False) -> bytes:
 # ---------------------------------------------------------------------------
 # M5/M6: zip explode
 # ---------------------------------------------------------------------------
+_ARCHIVE_SCHEMA = StructType(
+    [
+        StructField("filename", StringType()),
+        StructField("ext", StringType()),
+        StructField("size", LongType()),
+        StructField("content", BinaryType()),
+        StructField("pack", StringType()),
+    ]
+)
+
+
 def test_zip_explode_members_and_dirs(spark):
     blob = _zip_bytes({"a.txt": b"alpha", "sub/b.log": b"beta-data"}, with_dir=True)
-    schema = StructType(
-        [
-            StructField("filename", StringType()),
-            StructField("content", BinaryType()),
-        ]
+    df = spark.createDataFrame(
+        [("arc.zip", "zip", len(blob), bytearray(blob), "")], _ARCHIVE_SCHEMA
     )
-    df = spark.createDataFrame([("arc.zip", bytearray(blob))], schema)
-    out = explode_zip_entries(df, keep_cols=[]).orderBy("entry_name").collect()
+    out = with_zip_members(df).orderBy("filename").collect()
     # dir entry skipped (kafka.go:230-232)
-    assert [(r.pack, r.entry_name, r.entry_size, bytes(r.entry_content)) for r in out] == [
+    assert [(r.pack, r.filename, r.size, bytes(r.content)) for r in out] == [
         ("arc.zip", "a.txt", 5, b"alpha"),
         ("arc.zip", "sub/b.log", 9, b"beta-data"),
     ]
 
 
 def test_zip_explode_invalid_blob_drops(spark):
-    schema = StructType(
-        [
-            StructField("filename", StringType()),
-            StructField("content", BinaryType()),
-        ]
-    )
     df = spark.createDataFrame(
-        [("bad.zip", bytearray(b"not a zip")), ("null.zip", None)], schema
+        [("bad.zip", "zip", 9, bytearray(b"not a zip"), "")], _ARCHIVE_SCHEMA
     )
-    assert explode_zip_entries(df, keep_cols=[]).count() == 0
+    assert with_zip_members(df).count() == 0
 
 
 def test_gbk_entry_name_decode():

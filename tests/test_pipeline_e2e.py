@@ -53,8 +53,11 @@ def test_pipeline_quarantine_branch(spark, tmp_path):
 
 def test_config_driven_pipeline_from_file_events(spark, tmp_path):
     """AutoInit parity: ini-style BizConfig → custom file_events source →
-    standing pipeline, end to end on a real directory."""
-    from log_agent_spark.config import BizConfig, build_stream_pipeline, read_file_events
+    standing pipeline with the per-batch content enrichment, built the way
+    the agent (``__main__._start``) builds it, end to end on a real
+    directory."""
+    from log_agent_spark.__main__ import _stream_enrich
+    from log_agent_spark.config import BizConfig, read_file_events
 
     watch = tmp_path / "watched"
     watch.mkdir()
@@ -67,19 +70,20 @@ def test_config_driven_pipeline_from_file_events(spark, tmp_path):
     delivered: list[tuple] = []
     chain = MultiSink(
         [Sink(name="rec", write=lambda df: delivered.extend(
-            (r.path, r.op, r.biz) for r in df.collect()))]
+            (r.filepath, r.filename, bytes(r.content)) for r in df.collect()))]
     )
-    q = build_stream_pipeline(
+    q = run_event_pipeline(
         read_file_events(spark, cfg),
-        cfg,
         chain,
+        transform=_stream_enrich(cfg),
+        debounce_ms=cfg.debounce_ms or None,
         checkpoint_dir=str(tmp_path / "ckpt_cfg"),
     )
     try:
         deadline = time.time() + 60
         while time.time() < deadline and not delivered:
             time.sleep(1)
-        assert delivered == [(str(watch / "a.log"), "CREATE", "SPI")]
+        assert delivered == [(str(watch / "a.log"), "a.log", b"hello")]
     finally:
         q.stop()
 

@@ -117,23 +117,6 @@ def test_multisink_priority_order_and_commit(spark):
     assert calls == ["high", "low", "commit"]  # watchdog.go:98 desc order, K8 last
 
 
-def test_rabbitmq_stub_parity(spark):
-    """K5: the RabbitMQ sink is a log-and-succeed stub, exactly like the
-    reference adapter (rabbitmq.go:25-33) - records flow through a chain
-    containing it, nothing fails, commit still fires."""
-    from log_agent_spark.sinks.rabbitmq import rabbitmq_sink
-
-    df = spark.range(3)
-    calls: list[str] = []
-    chain = MultiSink(
-        [rabbitmq_sink(priority=5),
-         Sink(name="after", write=lambda d: calls.append("after"), priority=1)],
-        on_success=lambda d: calls.append("commit"),
-    )
-    chain(df)
-    assert calls == ["after", "commit"]
-
-
 def test_multisink_fail_fast_no_commit(spark):
     df = spark.range(3)
     calls: list[str] = []
@@ -220,33 +203,3 @@ def test_delta_since_and_commit_roundtrip(spark, tmp_path):
     )
     delta = delta_since(listing2, read_state(spark, state_dir))
     assert sorted(r.path for r in delta.collect()) == ["/b", "/c"]
-
-
-def test_file_copy_datasource_distributed_write(spark, tmp_path):
-    """K3 as a registered Python DataSource write format: per-partition
-    executor-side copies (sinks/filecopy_datasource.py)."""
-    import os
-
-    from log_agent_spark.sinks.filecopy_datasource import FileCopyDataSource
-
-    spark.dataSource.register(FileCopyDataSource)
-    dest = str(tmp_path / "ds_dest")
-    mtime = dt.datetime(2017, 6, 7, 16, 15, 42)
-    df = spark.createDataFrame(
-        [
-            ("sub/a", "a.log", bytearray(b"alpha"), mtime),
-            ("", "top.log", bytearray(b"top"), mtime),
-            ("sub/b", None, bytearray(b"skipme"), mtime),  # empty path ⇒ skip
-        ],
-        ["sub_dir", "filename", "content", "modify_time"],
-    ).repartition(4)
-    df.write.format("filecopy").option("dest_root", dest).mode("append").save()
-
-    with open(os.path.join(dest, "sub/a/a.log"), "rb") as f:
-        assert f.read() == b"alpha"
-    with open(os.path.join(dest, "top.log"), "rb") as f:
-        assert f.read() == b"top"
-    assert os.path.getmtime(os.path.join(dest, "sub/a/a.log")) == mtime.timestamp()
-    # the skip row produced no file anywhere under dest
-    all_files = [f for _, _, fs in os.walk(dest) for f in fs]
-    assert sorted(all_files) == ["a.log", "top.log"]

@@ -1,6 +1,5 @@
 """BatchMetricsListener captures the reference's per-batch observability
-(watchdog.go:309) from query progress; RocksDB provider carries stateful
-queries with disk-backed state."""
+(watchdog.go:309) from query progress, state-operator rows included."""
 
 from __future__ import annotations
 
@@ -11,17 +10,14 @@ import uuid
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
-from log_agent_spark.streaming.metrics import (
-    BatchMetricsListener,
-    use_rocksdb_state,
-)
+from log_agent_spark.streaming.metrics import BatchMetricsListener
 
 SCHEMA = StructType(
     [StructField("id", LongType()), StructField("ts", TimestampType())]
 )
 
 
-def test_listener_counts_rows_and_rocksdb_state(spark, tmp_path, rocksdb_state_store):
+def test_listener_counts_rows(spark, tmp_path):
     src = str(tmp_path / "src")
     table = f"met_{uuid.uuid4().hex[:8]}"
     spark.createDataFrame(
@@ -30,7 +26,6 @@ def test_listener_counts_rows_and_rocksdb_state(spark, tmp_path, rocksdb_state_s
 
     listener = BatchMetricsListener()
     spark.streams.addListener(listener)
-    use_rocksdb_state(spark)  # same provider the fixture set — exercises the helper
     q = (
         spark.readStream.schema(SCHEMA)
         .parquet(src)
