@@ -7,11 +7,11 @@ cmd/run.go): parse the ini, build one pipeline per active biz section
 - ``backfill`` (default): the S2/S3 history-import path — batch-ingest
   each watch tree (filters pushed into the walk), apply the biz
   transform, and write the canonical logfile parquet under ``--output``.
-- ``stream``: the S1 live path — file_events source → per-key debounce
-  (T1) → micro-batch keep-latest dedup (T3) → per-batch content
-  enrichment (M1, reading only the batch's files) → priority multi-sink
-  fan-out (K4 console, K3 file-copy when ``--copy-dest`` is given),
-  checkpointed (T4). Runs until ``--duration`` elapses or Ctrl-C.
+- ``stream``: the S1 live path — file_events source with the per-path
+  debounce (T1) in the source, one row per settled path (T3) → per-batch
+  content enrichment (M1, reading only the batch's files) → priority
+  multi-sink fan-out (K4 console, K3 file-copy when ``--copy-dest`` is
+  given), checkpointed (T4). Runs until ``--duration`` elapses or Ctrl-C.
 
 Example::
 
@@ -69,15 +69,15 @@ def _safe(name: str) -> str:
 def _stream_enrich(cfg):
     """Per-batch M1 enrichment: read ONLY the batch's files and hand
     FileMeta rows to the sink chain — the reference's read-content-on-event
-    hot path (watchdog.go:314-326). A batch holds the keys whose debounce
-    timers fired; no per-trigger cap bounds it (the reference's 100-record
-    batch, watchdog.go:22-27, is not ported).
+    hot path (watchdog.go:314-326). A batch holds the paths whose debounce
+    windows expired in the source; no per-trigger cap bounds it (the
+    reference's 100-record batch, watchdog.go:22-27, is not ported).
 
-    Fixed per-batch cost is paid about twice in a file's latency (once for
-    the poll to see the write, once more after the debounce deadline), so
-    the read is byte-sized — one partition for a normal batch, one job per
-    driver-side sink — and a batch with no live file reads nothing and
-    runs no sink job (sources/binary_files.read_binary_files)."""
+    Fixed per-batch cost is paid in a file's latency (a running batch
+    delays the poll that sees the window expire, then the emitting batch
+    runs), so the read is byte-sized — one partition for a normal batch,
+    one job per driver-side sink — and a batch with no live file reads
+    nothing and runs no sink job (sources/binary_files.read_binary_files)."""
     from pyspark.sql import functions as F
 
     from log_agent_spark.sources.binary_files import enrich_file_meta, read_binary_files
@@ -157,7 +157,6 @@ def main(argv: list[str] | None = None) -> int:
             read_file_events(spark, cfg),
             MultiSink(sinks),
             transform=_stream_enrich(cfg),
-            debounce_ms=cfg.debounce_ms or None,
             checkpoint_dir=ckpt,
         )
 

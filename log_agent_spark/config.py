@@ -165,15 +165,20 @@ def build_batch_ingest(spark: SparkSession, cfg: BizConfig) -> DataFrame:
 
 def read_file_events(spark: SparkSession, cfg: BizConfig) -> DataFrame:
     """S1 live source from config: the custom file_events DataSource with
-    the Rule's filters (F1/F2/F5) pushed into the walk, projected to
-    EVENT_SCHEMA so it feeds debounce/pipeline unchanged (the watcher
-    callback's Biz/RootPath stamping, watcher/fsnotify.go:49-54)."""
+    the Rule's filters (F1/F2/F5) pushed into the walk and its debounce
+    window (T1) held by the source, projected to EVENT_SCHEMA for the
+    pipeline (the watcher callback's Biz/RootPath stamping,
+    watcher/fsnotify.go:49-54)."""
     from pyspark.sql import functions as F
 
     from log_agent_spark.sources.file_events_stream import FileEventsDataSource
 
     spark.dataSource.register(FileEventsDataSource)
-    reader = spark.readStream.format("file_events").option("path", cfg.watch)
+    reader = (
+        spark.readStream.format("file_events")
+        .option("path", cfg.watch)
+        .option("debounce_ms", str(cfg.debounce_ms))
+    )
     if cfg.patterns not in ("", ".*"):
         reader = reader.option("pattern", cfg.patterns)
     if cfg.ignores:

@@ -5,9 +5,9 @@ stateful dataflow operators:
 
 - T1 per-key debounce ("collapse an event storm to the last event per key
   per quiescence window") → sessionization via gaps-and-islands + keep-last.
-  The true processing-time streaming form lives in
-  ``log_agent_spark/streaming/debounce.py``; this module proves the
-  semantics against a SQL oracle.
+  The true processing-time streaming form lives in the file_events source
+  (``log_agent_spark/sources/file_events_stream.py``); this module proves
+  the semantics against a SQL oracle.
 - T3 intra-batch keep-latest dedup → row_number() over desc order.
 - Tumbling-window aggregation / watermark-style bucketing (SURVEY §2.7).
 - M10 date/epoch projections (kafka.go:329-343).

@@ -5,8 +5,8 @@ PySpark's ``worker_util.setup_spark_files`` calls
 CPython 3.11 each cached ``zipimport.zipimporter`` answers by re-parsing its
 archive's whole central directory, and a warm worker holds a dozen or more
 importers of ``pyspark.zip`` (1,328 entries): about 125 ms of CPU per task
-before the first row, on every debounce state update, ``mapInPandas`` and
-``pandas_udf`` task.
+before the first row, on every ``mapInPandas``, ``pandas_udf`` and Python
+data source task.
 
 This module replaces ``zipimporter.invalidate_caches`` with a version that
 re-reads an archive only when its ``(st_ino, st_mtime_ns, st_size)`` differs

@@ -19,8 +19,8 @@ from pyspark.sql import types as T
 # ---------------------------------------------------------------------------
 # The stream element: one filesystem event (fsnotify.Event).
 # ``ts`` (arrival time) is added for event-time processing; the reference is
-# purely processing-time (debounce timers), which Spark models with
-# ProcessingTimeTimeout state — see streaming/debounce.py.
+# purely processing-time (debounce timers), which the file_events source
+# keeps per path in front of the batcher — see sources/file_events_stream.py.
 # ---------------------------------------------------------------------------
 EVENT_SCHEMA = T.StructType(
     [

@@ -3,26 +3,35 @@ Python DataSource (SURVEY.md §7 "whole-file binary streaming source").
 
 The reference's watchers (inotify `watcher/fsnotify.go:27-65`, mtime-diff
 polling `watcher/fspolling.go:33-87`) become a `SimpleDataSourceStreamReader`
-whose OFFSET is the `(path → mtime_ns)` snapshot — exactly the state the
-reference keeps in BadgerDB (`watchdog.go:429-436`), except checkpointed by
-Spark, which also gives deterministic replay (`readBetweenOffsets`) instead
-of the reference's hand-rolled commit.
+whose OFFSET is the settled `(path → [mtime_ns, size])` snapshot — the state
+the reference keeps in BadgerDB (`watchdog.go:429-436`), except checkpointed
+by Spark, which also gives deterministic replay (`readBetweenOffsets`)
+instead of the reference's hand-rolled commit.
 
-Per micro-batch: walk the tree (bounded depth, include/ignore regex — F1,
-F2, F5), diff the stat snapshot against the offset, and emit one event row
-per new (CREATE) or modified (WRITE) file, matching the op filter the
-reference applies at its source (`watcher/fsnotify.go:50-54`).
+The per-path debounce (T1, `watchdog.go:193-251`) lives here too, in front
+of the batcher as in the reference. Each `read` walks the tree (bounded
+depth, include/ignore regex — F1, F2, F5); a path whose stat differs from
+its pending entry (or, if none, from its settled entry) (re)starts its
+timer; a path quiet for `debounce_ms` settles into the offset and is
+emitted once, CREATE if it was absent from the previous offset, else WRITE
+(the op filter of `watcher/fsnotify.go:50-54`). A pending path that
+vanishes is dropped unseen. While nothing settles or vanishes `read`
+returns its start offset, so Spark runs no batch. `debounce_ms` = 0 (the
+default) emits on detection (T7).
+
+Timers are in memory only: a restart re-finds pending paths (they are not
+in the settled offset) and emits each one window later — the same loss the
+reference's in-memory timers take.
 
 Scale note: the snapshot-in-offset design is right for the per-biz watch
-trees this models (thousands of files); a 10^9-file deployment would move
-the snapshot into an operator-state store and keep only a high-water mark
-in the offset. The downstream plan (debounce → enrich → sinks) is
-unchanged either way.
+trees this models (thousands of files); a 10^9-file deployment would keep
+only a high-water mark in the offset.
 
 Usage:
     spark.dataSource.register(FileEventsDataSource)
     events = (spark.readStream.format("file_events")
-              .option("path", root).option("pattern", r"\\.log$").load())
+              .option("path", root).option("pattern", r"\\.log$")
+              .option("debounce_ms", "3000").load())
 """
 
 from __future__ import annotations
@@ -30,6 +39,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import re
+import time
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
@@ -84,7 +94,7 @@ def _diff(start: dict, end: dict) -> list[tuple]:
     rows = []
     for p, (mtime_ns, size) in sorted(end.items()):
         prev = start.get(p)
-        if prev is not None and prev[0] == mtime_ns:
+        if prev == (mtime_ns, size):
             continue  # unchanged — fspolling.go:71-87 isSaved
         op = "CREATE" if prev is None else "WRITE"  # fsnotify op filter :50-54
         rows.append(
@@ -93,12 +103,19 @@ def _diff(start: dict, end: dict) -> list[tuple]:
     return rows
 
 
+def _files(offset: dict) -> dict[str, tuple[int, int]]:
+    return {p: tuple(v) for p, v in offset.get("files", {}).items()}
+
+
 class FileEventsStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict):
         self.root = options["path"]
         self.pattern = options.get("pattern")
         self.ignore = options.get("ignore")
         self.max_depth = int(options.get("max_nesting_level", 0))
+        self.debounce_s = int(options.get("debounce_ms", 0)) / 1000
+        # path → (mtime_ns, size, seen_at): changed, not yet quiet for a window
+        self.pending: dict[str, tuple[int, int, float]] = {}
 
     def initialOffset(self) -> dict:
         return {"files": {}}
@@ -107,17 +124,28 @@ class FileEventsStreamReader(SimpleDataSourceStreamReader):
         return _walk(self.root, self.pattern, self.ignore, self.max_depth)
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        prev = {p: tuple(v) for p, v in start.get("files", {}).items()}
+        settled = _files(start)
         snap = self._snapshot()
-        rows = _diff(prev, snap)
-        next_offset = {"files": {p: list(v) for p, v in snap.items()}}
-        return iter(rows), next_offset
+        now = time.monotonic()
+        pending = {}
+        for p, stat in snap.items():
+            prev = self.pending.get(p)
+            if prev is not None and prev[:2] == stat:
+                pending[p] = prev
+            elif prev is not None or settled.get(p) != stat:
+                pending[p] = (*stat, now)  # every change re-arms the timer
+        ready = {p for p, (_, _, seen_at) in pending.items() if now - seen_at >= self.debounce_s}
+        self.pending = {p: v for p, v in pending.items() if p not in ready}
+        # vanished paths leave the snapshot; pending ones were never emitted
+        end = {p: v for p, v in settled.items() if p in snap}
+        end.update((p, snap[p]) for p in ready)
+        if end == settled:
+            return iter(()), start
+        return iter(_diff(settled, end)), {"files": {p: list(v) for p, v in end.items()}}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # deterministic replay after failure: same diff, from offsets alone
-        prev = {p: tuple(v) for p, v in start.get("files", {}).items()}
-        curr = {p: tuple(v) for p, v in end.get("files", {}).items()}
-        return iter(_diff(prev, curr))
+        return iter(_diff(_files(start), _files(end)))
 
 
 class FileEventsDataSource(DataSource):

@@ -1,24 +1,18 @@
-"""Kafka source (the north-star ingest path: Structured Streaming + Kafka).
+"""Kafka records as a table (the north-star ingest path reads Kafka).
 
-Two halves:
-
-- ``read_kafka_stream``: the ``readStream.format('kafka')`` wrapper with the
-  reference's rate/delivery knobs mapped to source options. The connector
-  jar is not in this image, so it raises a clear error when absent — the
-  wiring is still the real production shape.
-- ``from_kafka_records``: the exact INVERSE of
-  ``functions/envelope.to_kafka_records`` — Connect-envelope JSON value →
-  typed logfile columns. This is what makes the Kafka topic a first-class
-  TABLE: any consumer (this engine included) can round-trip the wire format
-  produced by the reference (watchdog/handler/kafka.go:329-343) back into
-  the 15-column relational row. Pure built-ins (from_json, unhex,
-  timestamp_millis) — codegen'd, no Python in the hot path, works
-  identically on batch and streaming DataFrames.
+``from_kafka_records`` is the exact INVERSE of
+``functions/envelope.to_kafka_records`` — Connect-envelope JSON value →
+typed logfile columns. This is what makes the Kafka topic a first-class
+TABLE: any consumer (this engine included) can round-trip the wire format
+produced by the reference (watchdog/handler/kafka.go:329-343) back into the
+15-column relational row. Pure built-ins (from_json, unhex,
+timestamp_millis) — codegen'd, no Python in the hot path, works identically
+on batch and streaming DataFrames.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from log_agent_spark.schemas import KAFKA_CONNECT_FIELD_TYPES
@@ -31,39 +25,6 @@ PAYLOAD_DDL = ", ".join(
     f"{name} {_CONNECT_TO_SPARK[t]}" for name, t in KAFKA_CONNECT_FIELD_TYPES.items()
 )
 ENVELOPE_DDL = f"struct<payload: struct<{PAYLOAD_DDL}>>"
-
-
-def read_kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topics: str,
-    starting_offsets: str = "latest",
-    max_offsets_per_trigger: int | None = 10000,
-) -> DataFrame:
-    """Streaming (key, value, topic, partition, offset, timestamp) rows.
-
-    maxOffsetsPerTrigger is the T6 backpressure analog (bounded queues,
-    watchdog.go:22-27): it caps records per micro-batch so one slow sink
-    cannot OOM the pipeline — rate limiting at the source, Spark-style.
-    """
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
-        # at-least-once + idempotent upsert sink = effectively-once, the
-        # same contract the reference reaches via Badger commit (T4/K8)
-        .option("failOnDataLoss", "false")
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    try:
-        return reader.load()
-    except Exception as exc:  # connector jar absent in this image
-        raise RuntimeError(
-            "Kafka source requires the spark-sql-kafka connector on the "
-            "classpath (add --packages org.apache.spark:spark-sql-kafka-0-10_2.13)."
-        ) from exc
 
 
 def from_kafka_records(records: DataFrame) -> DataFrame:

@@ -1,20 +1,24 @@
 """Live streaming pipeline wiring (SURVEY.md §3.2, §7 Phase 3-4).
 
-The reference's hot path — source → debounce → micro-batch + dedup →
+The reference's hot path — source → debounce → micro-batch →
 process → multi-sink → state commit — as one Structured Streaming query:
 
-    readStream (file events)
-      → debounce_stream (T1, processing-time state)
+    readStream (file events, per-path debounce T1 in the source —
+                sources/file_events_stream.py)
       → foreachBatch:
-            keep-latest dedup within the batch (T3)
             enrich/transform (M1-M10, same plan as batch ingest)
             MultiSink fan-out (K6 priority order, fail-fast)
         # checkpoint commit AFTER foreachBatch success = K8 ordering, free
 
+The query keeps no operator state: the source's offset (the settled
+snapshot) is its only recovery state. A source batch holds each path at
+most once, which is the reference's keep-latest dedup (T3,
+watchdog.go:314-326).
+
 The 200 ms batch tick (T2, watchdog.go:164) = processingTime trigger. No
-per-trigger cap exists: a micro-batch holds every key whose debounce timer
-fired, and the reference's 100-record batch bound (T2/T6 backpressure,
-watchdog.go:22-27) is not ported.
+per-trigger cap exists: a micro-batch holds every path whose debounce
+window expired, and the reference's 100-record batch bound (T2/T6
+backpressure, watchdog.go:22-27) is not ported.
 """
 
 from __future__ import annotations
@@ -24,20 +28,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.window import Window as W
 
 from log_agent_spark.sinks.multi import MultiSink
-from log_agent_spark.streaming.debounce import debounce_stream
 
 MICRO_BATCH_TICK = "200 milliseconds"  # watchdog.go:164
-
-
-def keep_latest_per_path(batch: DataFrame) -> DataFrame:
-    """T3 intra-batch dedup (watchdog.go:314-326): newest event per path."""
-    w = W.partitionBy("path").orderBy(F.desc("ts"))
-    return batch.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") == 1
-    ).drop("_rn")
 
 
 def run_event_pipeline(
@@ -59,13 +53,13 @@ def run_event_pipeline(
     ``dead_letter`` instead of the sink chain — the Spark-native form of the
     reference's abort-record-on-error + Handle404Error paths
     (watchdog.go:394-409).
+
+    ``debounce_ms`` is accepted and unused: the source debounces
+    (``read_file_events`` passes the biz window). ``perfbench/wl_live_tail.py``
+    still passes it; the keyword goes with the next change to perfbench/.
     """
-    stream = events
-    if debounce_ms:  # T7: debounce=0 bypasses T1 (watchdog.go:157-161)
-        stream = debounce_stream(stream, debounce_ms)
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        batch = keep_latest_per_path(batch)
         flagged = None
         if validate is not None:
             flagged = validate(batch).persist()  # one materialization, 2 branches
@@ -82,7 +76,7 @@ def run_event_pipeline(
                 flagged.unpersist()
 
     writer = (
-        stream.writeStream.foreachBatch(process_batch)
+        events.writeStream.foreachBatch(process_batch)
         .outputMode("append")
         .trigger(processingTime=trigger)
     )

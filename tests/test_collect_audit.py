@@ -26,8 +26,9 @@ ALLOWED = {
         "partition at a time (never the whole frame in memory), and the "
         "live read sizes a batch to one partition per maxPartitionBytes",
     ("__main__.py", 'live.select("path").distinct().collect()'):
-        "the micro-batch's debounced paths (strings only, no content) — "
-        "bounded by the keys whose debounce timers fired in that batch",
+        "the micro-batch's settled paths (strings only, no content) — "
+        "bounded by the paths whose debounce windows expired in the "
+        "source before that batch",
 }
 
 _PATTERN = re.compile(r"\.collect\(\)|\.toPandas\(\)|\.toLocalIterator\(\)")

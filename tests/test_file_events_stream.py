@@ -1,5 +1,6 @@
 """The custom file_events streaming DataSource: CREATE on new files, WRITE
-on modification, unchanged files silent, filters applied at the source."""
+on modification, unchanged files silent, filters applied at the source,
+and the per-path debounce (T1) held by the reader."""
 
 from __future__ import annotations
 
@@ -7,8 +8,12 @@ import os
 import time
 import uuid
 
+import pytest
+
+from log_agent_spark.sources import file_events_stream as fes
 from log_agent_spark.sources.file_events_stream import (
     FileEventsDataSource,
+    FileEventsStreamReader,
     _diff,
     _walk,
 )
@@ -41,6 +46,152 @@ def test_diff_ops():
     assert set(by_path) == {"/b", "/c"}  # /a unchanged → silent
     assert by_path["/b"][1] == "WRITE"
     assert by_path["/c"][1] == "CREATE"
+
+
+def test_diff_size_change_with_same_mtime_is_a_write():
+    assert [r[:2] for r in _diff({"/a": (100, 1)}, {"/a": (100, 7)})] == [("/a", "WRITE")]
+
+
+# ---------------------------------------------------------------------------
+# the reader's debounce, driven with a fake monotonic clock (no Spark)
+# ---------------------------------------------------------------------------
+class Clock:
+    def __init__(self):
+        self.t = 1000.0
+
+    def __call__(self):
+        return self.t
+
+
+@pytest.fixture
+def clock(monkeypatch):
+    c = Clock()
+    monkeypatch.setattr(fes.time, "monotonic", c)
+    return c
+
+
+def _reader(root, debounce_ms=1000):
+    return FileEventsStreamReader({"path": str(root), "debounce_ms": str(debounce_ms)})
+
+
+def _write(path, data, mtime_s):
+    path.write_bytes(data)
+    os.utime(path, (mtime_s, mtime_s))
+
+
+def _read(reader, start):
+    rows, end = reader.read(start)
+    return [(os.path.basename(r[0]), r[1], r[2]) for r in rows], end
+
+
+def test_storm_collapses_to_one_row(tmp_path, clock):
+    f = tmp_path / "a.log"
+    r = _reader(tmp_path)
+    off = r.initialOffset()
+    for i in range(5):  # a write every 300 ms, each inside the 1 s window
+        _write(f, b"x" * (i + 1), 100 + i)
+        rows, off = _read(r, off)
+        assert rows == []
+        clock.t += 0.3
+    clock.t += 1.0
+    rows, off = _read(r, off)
+    assert rows == [("a.log", "CREATE", 5)]  # the net change, last version
+    assert off["files"] == {str(f): [104 * 10**9, 5]}
+    clock.t += 5
+    assert _read(r, off) == ([], off)  # settled and unchanged: silent
+
+
+def test_rewrite_inside_the_window_rearms_the_timer(tmp_path, clock):
+    f = tmp_path / "a.log"
+    _write(f, b"v1", 100)
+    r = _reader(tmp_path)
+    rows, off = _read(r, r.initialOffset())
+    assert rows == []
+    clock.t += 0.8
+    _write(f, b"v2!", 101)
+    assert _read(r, off)[0] == []  # timer reset at 0.8 s
+    clock.t += 0.8  # 1.6 s after the first write, 0.8 s after the rewrite
+    assert _read(r, off)[0] == []
+    clock.t += 0.2
+    rows, off = _read(r, off)
+    assert rows == [("a.log", "CREATE", 3)]
+    # a change after settling is a WRITE, debounced again
+    _write(f, b"v3-longer", 102)
+    assert _read(r, off)[0] == []
+    clock.t += 1.0
+    assert _read(r, off)[0] == [("a.log", "WRITE", 9)]
+
+
+def test_zero_debounce_emits_on_detection(tmp_path, clock):
+    (tmp_path / "a.log").write_bytes(b"a")
+    r = FileEventsStreamReader({"path": str(tmp_path)})  # option-less default
+    rows, off = _read(r, r.initialOffset())
+    assert rows == [("a.log", "CREATE", 1)]
+    _write(tmp_path / "a.log", b"ab", 200)
+    assert _read(r, off)[0] == [("a.log", "WRITE", 2)]
+
+
+def test_pending_path_unlinked_is_dropped(tmp_path, clock):
+    (tmp_path / "keep.log").write_bytes(b"k")
+    (tmp_path / "gone.log").write_bytes(b"g")
+    r = _reader(tmp_path)
+    rows, off = _read(r, r.initialOffset())
+    assert rows == []
+    (tmp_path / "gone.log").unlink()
+    clock.t += 1.0
+    rows, off = _read(r, off)
+    assert rows == [("keep.log", "CREATE", 1)]
+    assert list(off["files"]) == [str(tmp_path / "keep.log")]
+    assert r.pending == {}
+
+
+def test_read_returns_start_while_nothing_settles(tmp_path, clock):
+    (tmp_path / "a.log").write_bytes(b"a")
+    r = _reader(tmp_path)
+    start = r.initialOffset()
+    for _ in range(3):
+        rows, end = r.read(start)
+        assert end is start and list(rows) == []
+        clock.t += 0.3
+    # a settled path that vanishes advances the offset, with no row
+    clock.t += 1.0
+    _, settled = r.read(start)
+    (tmp_path / "a.log").unlink()
+    rows, end = r.read(settled)
+    assert list(rows) == [] and end == {"files": {}}
+
+
+def test_replay_between_offsets_matches_read(tmp_path, clock):
+    (tmp_path / "old.log").write_bytes(b"o")
+    r = _reader(tmp_path, debounce_ms=0)
+    _, start = r.read(r.initialOffset())
+    _write(tmp_path / "old.log", b"o2", 300)
+    (tmp_path / "new.log").write_bytes(b"n")
+    rows, end = r.read(start)
+    rows = list(rows)
+    assert sorted(x[1] for x in rows) == ["CREATE", "WRITE"]
+    fresh = _reader(tmp_path, debounce_ms=0)  # a restarted query replays
+    assert list(fresh.readBetweenOffsets(start, end)) == rows
+
+
+def test_restart_refinds_pending_paths(tmp_path, clock):
+    (tmp_path / "a.log").write_bytes(b"a")
+    old = _reader(tmp_path)
+    rows, off = _read(old, old.initialOffset())
+    clock.t += 1.0
+    rows, off = _read(old, off)
+    assert rows == [("a.log", "CREATE", 1)]
+    (tmp_path / "b.log").write_bytes(b"bb")
+    clock.t += 0.1
+    assert _read(old, off) == ([], off)  # b pending when the query stops
+    new = _reader(tmp_path)  # a restart resumes from the settled offset
+    clock.t += 0.5
+    assert _read(new, off) == ([], off)  # the timer restarts on the first walk
+    clock.t += 1.0
+    rows, off2 = _read(new, off)
+    assert rows == [("b.log", "CREATE", 2)]
+    clock.t += 5
+    assert _read(new, off2) == ([], off2)  # emitted exactly once
 
 
 # ---------------------------------------------------------------------------

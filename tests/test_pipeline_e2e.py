@@ -1,10 +1,12 @@
-"""End-to-end hot path (SURVEY.md §3.2): file event source → debounce (T1)
-→ keep-latest dedup (T3) → per-biz transform (P4) → priority multi-sink
-(K6) → post-success state commit (K8), all through run_event_pipeline."""
+"""End-to-end hot path (SURVEY.md §3.2): file event source with its
+per-path debounce (T1, one row per settled path — T3) → per-biz transform
+(P4) → priority multi-sink (K6) → post-success state commit (K8), all
+through run_event_pipeline."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 import time
 
 from pyspark.sql import functions as F
@@ -37,7 +39,6 @@ def test_pipeline_quarantine_branch(spark, tmp_path):
         chain,
         validate=lambda df: df.withColumn("_valid", ~F.col("path").startswith("/bad")),
         dead_letter=lambda df: quarantined.extend(r.path for r in df.collect()),
-        debounce_ms=None,  # T7 bypass
         checkpoint_dir=str(tmp_path / "ckpt_q"),
         trigger="1 second",
     )
@@ -76,7 +77,6 @@ def test_config_driven_pipeline_from_file_events(spark, tmp_path):
         read_file_events(spark, cfg),
         chain,
         transform=_stream_enrich(cfg),
-        debounce_ms=cfg.debounce_ms or None,
         checkpoint_dir=str(tmp_path / "ckpt_cfg"),
     )
     try:
@@ -89,16 +89,11 @@ def test_config_driven_pipeline_from_file_events(spark, tmp_path):
 
 
 def test_event_pipeline_end_to_end(spark, tmp_path):
-    src = str(tmp_path / "events")
-    spark.createDataFrame(
-        [
-            _event("/a", "CREATE", 1),
-            _event("/a", "WRITE", 2),
-            _event("/a", "WRITE", 3),
-            _event("/b", "CREATE", 1),
-        ],
-        EVENT_SCHEMA,
-    ).write.parquet(src)
+    from log_agent_spark.config import BizConfig, read_file_events
+
+    watch = tmp_path / "watched"
+    watch.mkdir()
+    cfg = BizConfig(name="BSI.TEST", watch=str(watch), plugin="bsi", debounce_ms=1500)
 
     seen: list[list] = []
     committed: list[int] = []
@@ -119,70 +114,79 @@ def test_event_pipeline_end_to_end(spark, tmp_path):
     chain = MultiSink(
         [Sink(name="rec", write=record_sink, priority=5)], on_success=commit
     )
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
     q = run_event_pipeline(
-        stream,
+        read_file_events(spark, cfg),
         chain,
         transform=lambda df: df.withColumn("biz_u", F.upper("biz")),
-        debounce_ms=1000,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        trigger="1 second",
+        trigger="200 milliseconds",
     )
     try:
         deadline = time.time() + 120
+        while time.time() < deadline and not q.recentProgress:
+            time.sleep(0.2)
+        # a storm on a.log (three versions inside the window), one write on b.log
+        for sec in (1, 2, 3):
+            (watch / "a.log").write_bytes(b"v" * sec)
+            t = dt.datetime(2024, 1, 1, 0, 0, sec, tzinfo=dt.timezone.utc).timestamp()
+            os.utime(watch / "a.log", (t, t))
+            time.sleep(0.15)
+        (watch / "b.log").write_bytes(b"b")
         # Poll on `committed` (the LAST step of the batch callback), not
         # `seen` — asserting between the sink write and the commit hook
         # races q.stop() against the in-flight count() job.
         while time.time() < deadline and sum(committed) < 2:
-            time.sleep(1)
-        rows = {r.path: r for batch in seen for r in batch}
-        # T1: the /a storm collapsed to its last event; /b passed through
-        assert set(rows) == {"/a", "/b"}
-        assert rows["/a"].op == "WRITE"
-        assert rows["/a"].ts == dt.datetime(2024, 1, 1, 0, 0, 3)
+            time.sleep(0.5)
+        time.sleep(2)  # a further window: no intermediate version follows
+        rows = [r for batch in seen for r in batch]
+        by_path = {os.path.basename(r.path): r for r in rows}
+        # T1: the a.log storm collapsed to its last version; b.log passed
+        assert len(rows) == 2 and set(by_path) == {"a.log", "b.log"}
+        assert by_path["a.log"].op == "CREATE"  # the net change
+        assert by_path["a.log"].ts == dt.datetime(2024, 1, 1, 0, 0, 3)
         # P4: transform applied inside the batch
-        assert rows["/a"].biz_u == "BSI"
+        assert by_path["a.log"].biz_u == "BSI"
         # K8: commit ran after the sink, with the same row counts
         assert order and order[0] == "sink"
-        assert sum(committed) == sum(len(r) for r in seen)
+        assert sum(committed) == len(rows)
     finally:
         q.stop()
 
 
 def test_file_deleted_inside_its_window_leaves_query_running(spark, tmp_path):
     """Handle404 parity through the agent's stream wiring: a file rotated
-    away before its debounce timer fires is skipped by the batch's read;
-    the query stays up and the batch's other file is still copied."""
+    away inside its debounce window is dropped by the source and never
+    delivered; the query stays up and the other file is still copied."""
     from log_agent_spark.__main__ import _stream_enrich
     from log_agent_spark.config import BizConfig, read_file_events
     from log_agent_spark.sinks.filecopy import file_copy_sink
 
     watch = tmp_path / "watched"
     watch.mkdir()
-    (watch / "keep.log").write_bytes(b"kept")
-    (watch / "rotated.log").write_bytes(b"gone")
     dest = tmp_path / "dest"
     cfg = BizConfig(name="SPI.TEST", watch=str(watch), debounce_ms=3000)
     q = run_event_pipeline(
         read_file_events(spark, cfg),
         MultiSink([file_copy_sink(str(dest))]),
         transform=_stream_enrich(cfg),
-        debounce_ms=cfg.debounce_ms,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     try:
         deadline = time.time() + 90
-        while time.time() < deadline and not any(
-            p["numInputRows"] for p in q.recentProgress
-        ):
+        while time.time() < deadline and not q.recentProgress:
             time.sleep(0.1)
-        # both CREATE events are in debounce state; unlink one inside its
-        # 3 s window
+        (watch / "keep.log").write_bytes(b"kept")
+        (watch / "rotated.log").write_bytes(b"gone")
+        # the source polls every 200 ms while no batch runs: both paths are
+        # pending well before this, and 2 s short of their 3 s window
+        time.sleep(1.0)
         (watch / "rotated.log").unlink()
         while time.time() < deadline and q.isActive and not (dest / "keep.log").exists():
             time.sleep(0.5)
         assert q.isActive, q.exception()
         assert (dest / "keep.log").read_bytes() == b"kept"
         assert not (dest / "rotated.log").exists()
+        delivered = sum(p["numInputRows"] for p in q.recentProgress)
+        assert delivered == 1
     finally:
         q.stop()

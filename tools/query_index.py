@@ -5,9 +5,11 @@ of its implementation. Regenerate: python tools/query_index.py"""
 from __future__ import annotations
 
 import inspect
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def first_doc_line(fn) -> str:
@@ -100,7 +102,7 @@ def main() -> None:
         *rows,
         "",
     ]
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote QUERIES.md ({len(rows)} queries)")
 

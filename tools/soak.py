@@ -1,24 +1,30 @@
 """Composed end-to-end streaming soak (VERDICT r8 stretch 7): the full hot
-path — file-event source → debounce (T1) → keep-latest dedup (T3) →
-enrich to logfile shape (M1-M12) → multi-sink fan-out (K6) with the keyed
-parquet UPSERT (K2) and the broker-free Kafka-RECORD sink (K1 envelope) —
-run for ~100+ micro-batches under the supervisor (S4), with the
-BatchMetricsListener (watchdog.go:309 parity) capturing per-batch latency
-and state-store size.
+path — real files landed into a watch tree → the ``file_events`` source
+with its per-path debounce (T1, one row per settled path — T3) → enrich to
+logfile shape (M1-M12) → multi-sink fan-out (K6) with the keyed parquet
+UPSERT (K2) and the broker-free Kafka-RECORD sink (K1 envelope) — run for
+~100+ micro-batches under the supervisor (S4), with the
+BatchMetricsListener (watchdog.go:309 parity) capturing per-batch latency.
+
+A writer thread lands one wave of PATHS_PER_WAVE files at a time (each
+written to staging, then renamed in), rotating over N_PATHS fixed paths,
+and waits about 1 s between waves — never landing a wave before the
+previous one was emitted, so each wave is its own micro-batch.
 
 What a soak proves that the e2e tests cannot: the STANDING-query
-properties — state-store size stays bounded by the live key set (a
-debounce-state leak grows it monotonically), per-batch latency stays flat
-(a pinned-block / heap leak shows up as drift), and the upsert table ends
-idempotent (exactly one row per path, replays absorbed).
+properties — the source's offset (its only state: the settled snapshot)
+stays bounded by the watched tree (a leak grows it past the live path
+set), per-batch latency stays flat (a pinned-block / heap leak shows up as
+drift), and the upsert table ends idempotent (exactly one row per key,
+replays absorbed).
 
 Failure leg (VERDICT r9 item 5): the soak INJECTS two mid-run sink
 crashes (the tests/test_supervisor.py fault pattern — the K2 upsert sink
 raises once, failing that micro-batch) at ~30% and ~60% of the wave
 budget. Each must surface as exactly one supervisor restart that resumes
 from the checkpoint DURING the soak: the restart gate then requires
-restarts >= injected faults, and the idempotence/state gates prove the
-replayed batches produced no duplicate upserts and no state growth. The
+restarts >= injected faults, and the idempotence/offset gates prove the
+replayed batches produced no duplicate upserts and no offset growth. The
 MultiSink is fail-fast, HIGHER priority first (watchdog.go:98 parity), so
 the kafka-record append sink (priority 10) has already written when the
 upsert (priority 5) crashes — the replay therefore DUPLICATES that
@@ -45,45 +51,43 @@ import tempfile
 import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-N_WAVES = 110          # files; maxFilesPerTrigger=1 → ≥ N_WAVES data batches
-PATHS_PER_WAVE = 8     # events per wave, rotating over a fixed key set
-N_PATHS = 24           # live key population (debounce state upper bound)
+N_WAVES = 110          # one wave per micro-batch → ≥ N_WAVES data batches
+PATHS_PER_WAVE = 8     # files per wave, rotating over a fixed path set
+N_PATHS = 24           # live path population (the watched tree's size)
 DEBOUNCE_MS = 400
+WAVE_GAP_S = 1.0       # quiet time between waves, > the debounce window
 LATENCY_DRIFT_LIMIT = 2.0  # late-window median vs early-window median
 FAULT_FRACTIONS = (0.3, 0.6)  # inject a sink crash at these wave fractions
 
 
-def _gen_waves(src: str) -> int:
-    """Pre-generate the burst as N_WAVES small parquet files via pyarrow
-    (no Spark jobs — the stream must not race the generator)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _land_wave(w: int, watch: str, staging: str) -> None:
+    """Land wave ``w``: PATHS_PER_WAVE files, each written to staging with
+    a deterministic mtime and renamed into the watch tree (the lander's
+    atomic-appearance pattern)."""
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).timestamp()
+    for i in range(PATHS_PER_WAVE):
+        k = (w * PATHS_PER_WAVE + i) % N_PATHS
+        rel = f"dir{k % 3}/f{k:02d}.log"
+        tmp = os.path.join(staging, f"{w}_{i}.tmp")
+        with open(tmp, "w") as f:
+            f.write(f"wave {w} file {i}\n")
+        mtime = t0 + w + 0.037 * i
+        os.utime(tmp, (mtime, mtime))
+        os.replace(tmp, os.path.join(watch, rel))
 
-    t0 = dt.datetime(2024, 1, 1)
-    total = 0
-    for w in range(N_WAVES):
-        rows = []
-        for i in range(PATHS_PER_WAVE):
-            p = f"/soak/dir{(w + i) % 3}/f{(w * PATHS_PER_WAVE + i) % N_PATHS:02d}.log"
-            ts = t0 + dt.timedelta(seconds=w, milliseconds=37 * i)
-            rows.append((p, "WRITE" if w % 4 else "CREATE", "BSI", "/soak", ts, ts, False))
-        total += len(rows)
-        cols = list(zip(*rows))
-        table = pa.table(
-            {
-                "path": pa.array(cols[0], pa.string()),
-                "op": pa.array(cols[1], pa.string()),
-                "biz": pa.array(cols[2], pa.string()),
-                "root_path": pa.array(cols[3], pa.string()),
-                "ts": pa.array(cols[4], pa.timestamp("us")),
-                "mod_time": pa.array(cols[5], pa.timestamp("us")),
-                "is_dir": pa.array(cols[6], pa.bool_()),
-            }
-        )
-        pq.write_table(table, os.path.join(src, f"wave{w:04d}.parquet"))
-    return total
+
+def _offset_entries(ckpt: str) -> int | None:
+    """Paths in the source's last offset (ckpt/offsets/N: a version line,
+    the batch metadata, then one line per source)."""
+    offsets = os.path.join(ckpt, "offsets")
+    last = max((int(n) for n in os.listdir(offsets) if n.isdigit()), default=None)
+    if last is None:
+        return None
+    with open(os.path.join(offsets, str(last))) as f:
+        return len(json.loads(f.read().splitlines()[2])["files"])
 
 
 def _enrich(df):
@@ -117,8 +121,8 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     import __spark_entry__  # noqa: F401 — path setup parity with the tools
+    from log_agent_spark.config import BizConfig, read_file_events
     from log_agent_spark.functions.envelope import to_kafka_records
-    from log_agent_spark.schemas import EVENT_SCHEMA
     from log_agent_spark.session import get_spark
     from log_agent_spark.sinks.multi import MultiSink, Sink
     from log_agent_spark.sinks.upsert import upsert_parquet
@@ -128,14 +132,17 @@ def main() -> int:
 
     spark = get_spark("soak", **{"spark.sql.shuffle.partitions": "8"})
     root = tempfile.mkdtemp(prefix="log_agent_soak_")
-    src = os.path.join(root, "src")
+    watch = os.path.join(root, "watch")
+    staging = os.path.join(root, "staging")
     table_dir = os.path.join(root, "upsert_table")
     records_dir = os.path.join(root, "kafka_records")
     ckpt = os.path.join(root, "ckpt")
-    os.makedirs(src)
-
-    n_events = _gen_waves(src)
-    print(f"soak: {N_WAVES} waves / {n_events} events staged at {src}")
+    for d in ("dir0", "dir1", "dir2"):
+        os.makedirs(os.path.join(watch, d))
+    os.makedirs(staging)
+    cfg = BizConfig(name="BSI.SOAK", watch=watch, debounce_ms=DEBOUNCE_MS)
+    n_events = N_WAVES * PATHS_PER_WAVE
+    print(f"soak: {N_WAVES} waves / {n_events} file writes into {watch}")
 
     # Failure injection: when armed, the NEXT upsert write raises before
     # touching storage — the micro-batch fails, the query dies, and the
@@ -168,15 +175,9 @@ def main() -> int:
     stop_flag = threading.Event()
 
     def start_query():
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
         q = run_event_pipeline(
-            stream,
+            read_file_events(spark, cfg),
             chain,
-            debounce_ms=DEBOUNCE_MS,
             checkpoint_dir=ckpt,
             trigger="200 milliseconds",
         )
@@ -202,7 +203,21 @@ def main() -> int:
     t = threading.Thread(target=run_supervised, daemon=True)
     t.start()
 
-    # Drain: every staged file consumed AND the debounce quiesce flushed.
+    def write_waves():
+        for w in range(N_WAVES):
+            _land_wave(w, watch, staging)
+            # the wave is emitted (rows are counted once: a failed batch
+            # reports no progress, its replay does), then a quiet gap
+            while listener.total_rows() < PATHS_PER_WAVE * (w + 1):
+                if stop_flag.is_set():
+                    return
+                time.sleep(0.05)
+            time.sleep(WAVE_GAP_S)
+
+    writer = threading.Thread(target=write_waves, daemon=True)
+    writer.start()
+
+    # Drain: every wave landed and emitted.
     # Fault schedule: arm one sink crash as each wave fraction is crossed.
     fault_at = sorted({max(2, int(N_WAVES * f)) for f in FAULT_FRACTIONS})
     deadline = time.time() + 600
@@ -228,12 +243,13 @@ def main() -> int:
                 fault_at.pop(0)
                 fault_armed.set()
                 print(f"soak: armed fault injection at batch {data_batches}")
-            if data_batches >= N_WAVES and emitted >= N_PATHS:
-                # all waves ingested; give the debounce one quiesce window
+            if not writer.is_alive() and listener.total_rows() >= n_events:
+                # all waves emitted; a late duplicate would land in this wait
                 time.sleep(max(2.0, DEBOUNCE_MS / 1000 * 3))
                 break
     finally:
         stop_flag.set()
+        writer.join(timeout=10)
         for q in queries:
             try:
                 q.stop()
@@ -248,7 +264,7 @@ def main() -> int:
 
     batches = [b for b in listener.batches if b.num_input_rows > 0]
     durs = [b.duration_ms for b in batches if b.duration_ms]
-    states = [b.state_rows for b in batches if b.state_rows is not None]
+    offset_entries = _offset_entries(ckpt)
     n = len(durs)
     if n < 2:
         # too few data batches to compute a drift (source never started /
@@ -284,7 +300,9 @@ def main() -> int:
         ),
         "both scheduled faults fired": n_faults == len(FAULT_FRACTIONS),
         f">=~{N_WAVES} data micro-batches": len(batches) >= int(N_WAVES * 0.9),
-        "state_rows bounded by live keys": bool(states) and max(states) <= N_PATHS * 2,
+        "offset bounded by live paths": (
+            offset_entries is not None and offset_entries <= N_PATHS * 2
+        ),
         f"latency flat (late/early <= {LATENCY_DRIFT_LIMIT})": 0 < drift <= LATENCY_DRIFT_LIMIT,
         "upsert idempotent (rows == keys)": upsert_rows == upsert_keys > 0,
         "records emitted": emitted > 0,
@@ -299,7 +317,7 @@ def main() -> int:
     }
     report = {
         "waves": N_WAVES,
-        "events_staged": n_events,
+        "file_writes": n_events,
         "data_batches": len(batches),
         "restarts": restarts_seen[0] if restarts_seen else None,
         "injected_faults_at_batch": faults_fired,
@@ -309,8 +327,7 @@ def main() -> int:
             "drift": round(drift, 3),
             "max": max(durs) if durs else None,
         },
-        "state_rows": {"max": max(states) if states else None,
-                       "last": states[-1] if states else None},
+        "offset_entries_last": offset_entries,
         "upsert_rows": upsert_rows,
         "kafka_records": emitted,
         "kafka_records_distinct": distinct_records,
@@ -321,17 +338,17 @@ def main() -> int:
     lines = [
         "# SOAK — standing-pipeline endurance (tools/soak.py)",
         "",
-        "Full hot path (source → debounce T1 → keep-latest T3 → enrich →",
-        "MultiSink K6 with the K2 parquet upsert and the K1 broker-free",
-        "kafka-record sink) under the S4 supervisor, "
-        f"{N_WAVES} single-file micro-batches.",
+        "Full hot path (real files → file_events source with its per-path",
+        "debounce T1 → enrich → MultiSink K6 with the K2 parquet upsert and",
+        "the K1 broker-free kafka-record sink) under the S4 supervisor, "
+        f"{N_WAVES} waves of {PATHS_PER_WAVE} files, one micro-batch each.",
         "",
         "| gate | value | verdict |",
         "|---|---|---|",
         f"| data micro-batches | {len(batches)} | {'ok' if gates[f'>=~{N_WAVES} data micro-batches'] else 'FAIL'} |",
         f"| injected sink crashes (at batch) | {n_faults} {faults_fired} | {'ok' if gates['both scheduled faults fired'] else 'FAIL'} |",
         f"| supervisor restarts (>= faults, <= 5) | {report['restarts']} | {'ok' if gates[f'{n_faults} injected faults all restarted, restarts<=5'] else 'FAIL'} |",
-        f"| state rows max (cap {N_PATHS * 2}) | {report['state_rows']['max']} | {'ok' if gates['state_rows bounded by live keys'] else 'FAIL'} |",
+        f"| source offset entries, last (cap {N_PATHS * 2}) | {offset_entries} | {'ok' if gates['offset bounded by live paths'] else 'FAIL'} |",
         f"| latency drift late/early | {report['latency_ms']['drift']} | {'ok' if gates[f'latency flat (late/early <= {LATENCY_DRIFT_LIMIT})'] else 'FAIL'} |",
         f"| upsert rows == keys | {upsert_rows} == {upsert_keys} | {'ok' if gates['upsert idempotent (rows == keys)'] else 'FAIL'} |",
         f"| kafka records emitted | {emitted} | {'ok' if gates['records emitted'] else 'FAIL'} |",
@@ -339,13 +356,14 @@ def main() -> int:
         f"| distinct records == upsert rows | {distinct_records} == {upsert_rows} | {'ok' if gates['distinct records == upsert rows'] else 'FAIL'} |",
         "",
         f"Early-window median batch {early} ms, late-window {late} ms, max "
-        f"{report['latency_ms']['max']} ms. A debounce-state leak would grow "
-        f"state_rows past the {N_PATHS}-key live set; a pinned-block/heap "
+        f"{report['latency_ms']['max']} ms. A leak in the source's settled "
+        f"snapshot would grow its offset past the {N_PATHS}-path tree; a "
+        "pinned-block/heap "
         "leak would drift the late-window median. The injected K2 sink "
         "crashes (the test_supervisor.py fault pattern) each failed one "
         "micro-batch mid-soak; the supervisor restarted from the "
         "checkpoint and the replays left rows == keys (no duplicate "
-        "upserts) with state still bounded — restart IS recovery when "
+        "upserts) with the offset still bounded — restart IS recovery when "
         "the sink is idempotent. The higher-priority append sink had "
         "already written when the crash hit, so its replay duplicates "
         "are the honest at-least-once residue: bounded by the replayed "
@@ -360,7 +378,7 @@ def main() -> int:
     # a --waves smoke run is a spot-check: print, never clobber the
     # committed full-length artifact (the skew_probe subset discipline)
     if waves >= 110:
-        with open("/root/repo/SOAK.md", "w") as f:
+        with open(os.path.join(REPO, "SOAK.md"), "w") as f:
             f.write("\n".join(lines))
     else:
         print(f"smoke run ({waves} waves) — SOAK.md NOT rewritten")
