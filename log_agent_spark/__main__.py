@@ -84,7 +84,7 @@ def _stream_enrich(cfg):
 
     def _t(batch):
         live = batch.filter(F.col("op") != "REMOVE")
-        paths = [r.path for r in live.select("path").distinct().collect()]
+        paths = [r.path for r in live.select("path").collect()]
         raw = read_binary_files(batch.sparkSession, paths)
         return cfg.transform(enrich_file_meta(raw, cfg.watch))
 

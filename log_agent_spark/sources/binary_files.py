@@ -5,6 +5,10 @@ emits whole files as records. The Spark-first batch form is the built-in
 ``binaryFile`` data source: recursive listing, glob pushdown at listing time
 (the analog of the walker's prune-during-walk, fsnotify.go:163-165), and the
 ``path/length/modificationTime/content`` columns — no Python in the scan.
+Both reads (the backfill's tree, the live path's batch of files) read
+local files: the driver stats or walks them itself to size the scan by
+bytes, and the tree walk also recovers the zero-byte files Spark's file
+index drops.
 
 Enrichment (M1, watchdog.go:328-385) is a pure projection over those
 columns. Create-time has no portable Spark source (ctime vs birth time,
@@ -15,6 +19,8 @@ and let business transforms override.
 
 from __future__ import annotations
 
+import datetime as dt
+import fnmatch
 import functools
 import math
 import os
@@ -52,13 +58,22 @@ def read_binary_tree(
     ignore: str | None = None,
     max_nesting_level: int | None = None,
 ) -> DataFrame:
-    """Recursive whole-file scan with the reference's filter stack.
+    """Recursive whole-file scan of a local tree with the reference's
+    filter stack.
 
     - ``glob``    → pathGlobFilter, applied AT LISTING TIME (cheapest — the
                     analog of pruning during the walk).
     - ``pattern``/``ignore`` → F1/F2 regex include/exclude on the full path
                     (rlike predicates; the listing already shrank the input).
     - ``max_nesting_level`` → F5 depth bound relative to root (0/None = off).
+
+    Spark's file index drops ZERO-byte files, but the reference ships them
+    (content "0x" on the wire, kafka.go:323-325): one local walk of the
+    tree (``_walk_tree``) finds them with Spark's own listing rules and
+    unions them as metadata-only rows (content = x''), only when there are
+    any. The same walk sums the bytes the scan reads, and the scan is
+    coalesced by them (``coalesce_by_bytes``): split by openCostInBytes, a
+    tree of small files would spread over one task per core.
     """
     reader = (
         spark.read.format("binaryFile").option("recursiveFileLookup", "true")
@@ -66,12 +81,10 @@ def read_binary_tree(
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     df = reader.load(root)
-    # binaryFile plans one partition per byte range, so ZERO-byte files can
-    # never surface from it. The reference ships empty files (content "0x"
-    # on the wire, kafka.go:323-325), so recover them with a listing pass —
-    # the same driver-side FS metadata walk Spark's own file index does —
-    # and union metadata-only rows (content = x'').
-    df = df.unionByName(_empty_file_rows(spark, root, glob))
+    empties, n_bytes = _walk_tree(root, glob)
+    if empties:
+        df = df.unionByName(spark.createDataFrame(empties, BINARY_FILE_SCHEMA))
+    df = coalesce_by_bytes(df, n_bytes)
     if pattern and pattern not in (".*", ""):
         df = df.filter(F.col("path").rlike(pattern))  # F1 fsnotify.go:184-190
     if ignore:
@@ -83,37 +96,76 @@ def read_binary_tree(
     return df
 
 
-def _empty_file_rows(spark: SparkSession, root: str, glob: str | None) -> DataFrame:
-    """Zero-byte files under ``root`` in the binaryFile row shape.
+def _walk_tree(root: str, glob: str | None) -> tuple[list[tuple], int]:
+    """One local walk of ``root``: the binaryFile rows of the zero-byte
+    files the scan would list, and the total bytes of the files it reads.
 
-    Uses the Hadoop FileSystem API (any supported FS — local, HDFS, S3A);
-    only METADATA of empty files reaches the driver, bounded by the count
-    of empty files, not the tree size. Hidden files ('.'/'_' prefixes) are
-    skipped to match Hadoop's listing filter; ``glob`` applies to the
-    filename like pathGlobFilter does.
+    A name is kept exactly when Spark's listing keeps it
+    (``_spark_lists``), and ``glob`` applies to file names like
+    pathGlobFilter does. Paths and modification times take the binaryFile
+    form: ``file:`` + absolute path, milliseconds.
     """
-    import datetime as dt
-    import fnmatch
+    empties = []
+    n_bytes = 0
+    pending = [os.path.abspath(root)]
+    while pending:
+        try:
+            entries = list(os.scandir(pending.pop()))
+        except (FileNotFoundError, NotADirectoryError):
+            continue
+        for entry in entries:
+            try:
+                is_dir = entry.is_dir()
+                if not _spark_lists(entry.name, is_dir):
+                    continue
+                if is_dir:
+                    pending.append(entry.path)
+                    continue
+                st = entry.stat()
+            except FileNotFoundError:  # unlinked (or a dangling link) mid-walk
+                continue
+            if glob and not fnmatch.fnmatch(entry.name, glob):
+                continue
+            n_bytes += st.st_size
+            if st.st_size == 0:
+                ms = st.st_mtime_ns // 1_000_000
+                mtime = dt.datetime.fromtimestamp(ms / 1000, dt.timezone.utc)
+                empties.append((f"file:{entry.path}", mtime, 0, bytearray()))
+    return empties, n_bytes
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    rows = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        if st.getLen() != 0:
-            continue
-        name = st.getPath().getName()
-        if name.startswith(".") or name.startswith("_"):
-            continue
-        if glob and not fnmatch.fnmatch(name, glob):
-            continue
-        mtime = dt.datetime.fromtimestamp(
-            st.getModificationTime() / 1000.0, tz=dt.timezone.utc
-        ).replace(tzinfo=None)
-        rows.append((st.getPath().toString(), mtime, 0, bytearray(b"")))
-    return spark.createDataFrame(rows, BINARY_FILE_SCHEMA)
+
+def _spark_lists(name: str, is_dir: bool) -> bool:
+    """Whether Spark's file listing keeps a path of this name.
+
+    Every level drops '_'/'.' prefixes (except a '_' name holding '=', a
+    partition directory) and the ``._COPYING_`` suffix of a file still
+    being copied, unless the name starts _metadata/_common_metadata
+    (HadoopFSUtils.shouldFilterOutPathName); the file index then drops
+    '_'/'.' file names again (PartitioningAwareFileIndex.isDataPath), so
+    that exception keeps directories only.
+    """
+    hidden = (name.startswith("_") and "=" not in name) or name.startswith(".")
+    if (hidden or name.endswith("._COPYING_")) and not name.startswith(
+        ("_common_metadata", "_metadata")
+    ):
+        return False
+    return is_dir or not hidden
+
+
+def coalesce_by_bytes(df: DataFrame, n_bytes: int) -> DataFrame:
+    """``df`` in ceil(n_bytes / spark.sql.files.maxPartitionBytes)
+    partitions, at least one — the byte-sizing rule of both whole-file
+    reads.
+
+    A scan's own split count is at least this bound (its splits hold at
+    most maxPartitionBytes, counting openCostInBytes per file), and a
+    coalesce never widens a scan: the rule only merges the padding of
+    small files, and on a tree of large files the two counts meet. Each
+    partition stays about as large as the scan's own splits, so a large
+    read still reaches a driver-side consumer a bounded piece at a time.
+    """
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return df.coalesce(max(1, math.ceil(n_bytes / conf.filesMaxPartitionBytes())))
 
 
 def read_binary_files(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -127,12 +179,10 @@ def read_binary_files(spark: SparkSession, paths: list[str]) -> DataFrame:
       vanish after the listing; a missing path fails the listing itself with
       PATH_NOT_FOUND, so the paths are stat-ed first and, when one vanishes
       between the stat and the listing, stat-ed again.
-    - The scan is coalesced to ceil(bytes / spark.sql.files.maxPartitionBytes)
-      partitions. Split by openCostInBytes, a few small files would spread
-      over one partition per core, and each driver-side consumer
-      (toLocalIterator, show) runs one job per partition; the bound keeps
-      each partition about as large as the scan's own splits, so a large
-      catch-up batch still reaches the driver a bounded piece at a time.
+    - The scan is coalesced by the files' bytes (``coalesce_by_bytes``):
+      each driver-side consumer (toLocalIterator, show) runs one job per
+      partition, and split by openCostInBytes a few small files would
+      spread over one partition per core.
     - With no file left, the frame has the binaryFile schema and no
       partitions, so actions on it run no job.
     """
@@ -152,8 +202,7 @@ def read_binary_files(spark: SparkSession, paths: list[str]) -> DataFrame:
                 raise
             present = still
             continue
-        max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        return raw.coalesce(max(1, math.ceil(sum(present.values()) / max_bytes)))
+        return coalesce_by_bytes(raw, sum(present.values()))
     return spark.range(0).select(
         *(F.lit(None).cast(f.dataType).alias(f.name) for f in BINARY_FILE_SCHEMA)
     )

@@ -25,7 +25,7 @@ ALLOWED = {
         "K3 driver-side file copy, the one file-copy sink: streams one "
         "partition at a time (never the whole frame in memory), and the "
         "live read sizes a batch to one partition per maxPartitionBytes",
-    ("__main__.py", 'live.select("path").distinct().collect()'):
+    ("__main__.py", 'live.select("path").collect()'):
         "the micro-batch's settled paths (strings only, no content) — "
         "bounded by the paths whose debounce windows expired in the "
         "source before that batch",

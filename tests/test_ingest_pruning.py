@@ -6,6 +6,9 @@ table."""
 
 from __future__ import annotations
 
+import math
+import os
+
 from pyspark.sql import functions as F
 
 from log_agent_spark.plans.agentdemo import build_fixture_tree
@@ -99,9 +102,10 @@ def test_runtime_bloom_filter_reduces_shuffle_join(spark, sf_dir):
 
 
 def test_zero_byte_files_are_ingested(spark, tmp_path):
-    """binaryFile cannot plan splits for 0-byte files; the listing-recovery
-    pass must surface them — the reference ships empty files (the '0x' wire
-    convention exists for exactly this, kafka.go:323-325)."""
+    """Spark's file index drops 0-byte files; the tree walk must surface
+    them — the reference ships empty files (the '0x' wire convention exists
+    for exactly this, kafka.go:323-325) — exactly where Spark's listing
+    surfaces a non-empty file at the same place."""
     from log_agent_spark.sources.binary_files import enrich_file_meta, read_binary_tree
 
     tree = tmp_path / "tree"
@@ -132,3 +136,77 @@ def test_zero_byte_files_are_ingested(spark, tmp_path):
         )
     sub = enrich_file_meta(df, str(tree / "sub"), "h").select("sub_dir", "folder")
     assert sorted(sub.collect()) == [("empty.log", ""), ("full.log", "")]
+
+    # Spark's hidden-path rule holds at every level, for directories too,
+    # and a file still being copied (._COPYING_) is not listed: each place
+    # holds a 0-byte file and a 1-byte twin with the same mtime
+    rules = tmp_path / "rules"
+    mtime_ns = 1_700_000_000_123_456_789
+    twins = [
+        (f"{d}/empty.log", f"{d}/full.log")
+        for d in ("sub", "_tmp", ".cache", "_day=1", "_metadata", "x._COPYING_")
+    ] + [
+        (f"sub/{empty}", f"sub/{full}")
+        for empty, full in (
+            ("a.log._COPYING_", "b.log._COPYING_"),
+            ("_x=1.log", "_y=1.log"),
+            ("_metadata", "_metadata2"),
+            ("empty.txt", "full.txt"),
+        )
+    ]
+    for empty, full in twins:
+        for rel, data in ((empty, b""), (full, b"x")):
+            path = rules / rel
+            path.parent.mkdir(parents=True, exist_ok=True)
+            path.write_bytes(data)
+            os.utime(path, ns=(mtime_ns, mtime_ns))
+
+    for glob in (None, "*.log"):
+        listed = {
+            r.path.removeprefix(f"file:{rules}/"): r
+            for r in read_binary_tree(spark, str(rules), glob=glob).collect()
+        }
+        for empty, full in twins:
+            assert (empty in listed) == (full in listed), (glob, empty, sorted(listed))
+            if empty in listed:
+                assert listed[empty].length == 0
+                assert listed[empty].modificationTime == listed[full].modificationTime
+        for rel in ("sub/empty.log", "_day=1/empty.log", "sub/_x=1.log"):
+            assert rel in listed
+        for rel in (".cache/empty.log", "_tmp/empty.log", "sub/a.log._COPYING_"):
+            assert rel not in listed
+        assert ("sub/empty.txt" in listed) == (glob is None)
+
+
+def test_ingest_scan_is_sized_by_bytes(spark, tmp_path):
+    """The backfill scan plans ceil(bytes / maxPartitionBytes) partitions —
+    one at fixture size, not one per core — and more once the tree's bytes
+    exceed maxPartitionBytes; the zero-byte rows are a union input only
+    when the tree has an empty file."""
+    tree = tmp_path / "tree"
+    build_fixture_tree(str(tree))
+    files = [os.path.join(d, f) for d, _, fs in os.walk(tree) for f in fs]
+    n_bytes = sum(os.path.getsize(f) for f in files)
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+
+    df = ingest_tree(spark, str(tree), host="h")
+    assert df.rdd.getNumPartitions() == math.ceil(n_bytes / max_bytes) == 1
+    assert "Union" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(n_bytes // 3))
+        narrow = ingest_tree(spark, str(tree), host="h")
+        assert 1 < narrow.rdd.getNumPartitions() <= math.ceil(n_bytes / (n_bytes // 3))
+        assert narrow.count() == df.count()
+    finally:
+        spark.conf.set(key, saved)
+
+    for f in files:
+        if os.path.getsize(f) == 0:
+            os.remove(f)
+    no_empties = ingest_tree(spark, str(tree), host="h")
+    plan = no_empties._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan, plan
+    assert no_empties.rdd.getNumPartitions() == 1

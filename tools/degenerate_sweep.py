@@ -41,7 +41,8 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC_SF = "/root/testdata/sf0.001"
 # rows kept per table — small enough to create degenerate shapes, large

@@ -5,7 +5,7 @@ dominates most queries — SCALING.md's sublinear tails mostly measure
 constant-cost amortization, not asymptotic behavior (VERDICT r6,
 Performance). This tool manufactures one more decade locally: a seeded
 key-shifted union of 10 sf0.1 replicas, written ONCE to a non-driver dir
-(default /root/repo/localdata/sf1, gitignored — ~170 MB of parquet;
+(default localdata/sf1 in the checkout, gitignored — ~170 MB of parquet;
 regenerate with `python tools/make_sf1.py`). tools/scale_probe.py picks it
 up via --sf1.
 
@@ -54,14 +54,15 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
 SRC_SF_DIR = "/root/testdata/sf0.1"
-OUT_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/localdata/sf1")
+OUT_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(REPO, "localdata", "sf1"))
 SKEW_OUT_DIR = os.environ.get(
-    "SPARK_GRAFT_SF1SKEW_DIR", "/root/repo/localdata/sf1skew"
+    "SPARK_GRAFT_SF1SKEW_DIR", os.path.join(REPO, "localdata", "sf1skew")
 )
 REPLICAS = 10
 SHIFT = 10_000_000  # > every sf0.1 key; multiple of the 1e6 slice modulus

@@ -22,8 +22,8 @@ byte-identical):
   800-row hash group) and MinHash/LSH candidate generation (a true dup
   cluster of c docs IS C(c,2) candidate pairs by construction).
 
-All other tables are copied untouched. Output (gitignored):
-/root/repo/localdata/skew01, sentinel _COMPLETE.json written last.
+All other tables are copied untouched. Output (gitignored): localdata/skew01
+in the checkout, sentinel _COMPLETE.json written last.
 """
 
 from __future__ import annotations
@@ -32,12 +32,13 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
 SRC = "/root/testdata/sf0.1"
-OUT = os.environ.get("SPARK_GRAFT_SKEW_DIR", "/root/repo/localdata/skew01")
+OUT = os.environ.get("SPARK_GRAFT_SKEW_DIR", os.path.join(REPO, "localdata", "skew01"))
 
 HOT_USER = 9_000_001
 MEGA_ORDER = 9_000_001

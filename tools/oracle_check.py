@@ -20,15 +20,15 @@ Usage::
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-
-import os
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # default mirrors the driver's correctness SF; override for the sf0.001
 # edge-case sweep (tiny groups, empty join slices):

@@ -9,10 +9,12 @@ ReusedExchange). Regenerate after plan-affecting changes:
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -107,7 +109,7 @@ def main() -> None:
         out.append(buf.getvalue().rstrip())
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote PLANS.md ({len(REPRESENTATIVES)} plans)")
 

@@ -27,7 +27,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SFS = [("0.001", 0.001), ("0.01", 0.01), ("0.1", 0.1)]
 
@@ -36,7 +37,7 @@ SFS = [("0.001", 0.001), ("0.01", 0.01), ("0.1", 0.1)]
 # a gitignored dir. At 17 MB the driver fixtures leave fixed overhead
 # dominant (slopes 0.2-0.5 mostly measure constant-cost amortization,
 # VERDICT r6); the extra decade is where data-bound behavior starts to show.
-SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/localdata/sf1")
+SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(REPO, "localdata", "sf1"))
 SF1_TOP_N = 40  # probe sf1 on the N most expensive queries (by sf0.1 time)
 
 # Default probe set: every query >= ~1.5s in BENCH_DETAIL plus the newest
@@ -187,7 +188,7 @@ def main() -> None:
             f"| `{name}` | {times[0]:.2f} | {times[1]:.2f} | {times[2]:.2f}"
             f" | {slope:.2f} | {tail:.2f} |" + sf1_cells
         )
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote SCALING.md ({len(rows)} queries)")
 

@@ -19,10 +19,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 UNIFORM = "/root/testdata/sf0.1"
-SKEWED = os.environ.get("SPARK_GRAFT_SKEW_DIR", "/root/repo/localdata/skew01")
+SKEWED = os.environ.get("SPARK_GRAFT_SKEW_DIR", os.path.join(REPO, "localdata", "skew01"))
 
 # Measured verdicts (kept in the tool so regeneration preserves them);
 # rendered into SKEW.md's notes column.
@@ -89,9 +90,9 @@ PROBE = [
 ]
 
 
-_SF1_UNIFORM = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/localdata/sf1")
+_SF1_UNIFORM = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(REPO, "localdata", "sf1"))
 _SF1_SKEWED = os.environ.get(
-    "SPARK_GRAFT_SF1SKEW_DIR", "/root/repo/localdata/sf1skew"
+    "SPARK_GRAFT_SF1SKEW_DIR", os.path.join(REPO, "localdata", "sf1skew")
 )
 
 # ---------------------------------------------------------------------------
@@ -316,7 +317,7 @@ def main() -> None:
                 f" {r.keys_over_cap} | {r.pair_mass} | {r.capped_pair_mass} |"
                 f" {ack} |"
             )
-    with open("/root/repo/SKEW.md", "w") as f:
+    with open(os.path.join(REPO, "SKEW.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     n_total = len(rows) + (len(sf1_rows) if sf1_rows else 0)
     print(f"wrote SKEW.md ({n_total} measurements)")
