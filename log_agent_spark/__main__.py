@@ -77,7 +77,9 @@ def _stream_enrich(cfg):
     delays the poll that sees the window expire, then the emitting batch
     runs), so the read is byte-sized — one partition for a normal batch,
     one job per driver-side sink — and a batch with no live file reads
-    nothing and runs no sink job (sources/binary_files.read_binary_files)."""
+    nothing and runs no sink job. It is the backfill's read
+    (sources/binary_files.read_binary_files): the source's walk admits only
+    files it returns, zero-byte ones included, so no emitted path is lost."""
     from pyspark.sql import functions as F
 
     from log_agent_spark.sources.binary_files import enrich_file_meta, read_binary_files

@@ -24,7 +24,6 @@ from log_agent_spark.sources.binary_files import enrich_file_meta, read_binary_t
 def ingest_tree(
     spark: SparkSession,
     root: str,
-    glob: str | None = None,
     pattern: str | None = None,
     ignore: str | None = None,
     max_nesting_level: int | None = None,
@@ -34,12 +33,7 @@ def ingest_tree(
 ) -> DataFrame:
     """Directory tree → logfile rows (not yet written)."""
     raw = read_binary_tree(
-        spark,
-        root,
-        glob=glob,
-        pattern=pattern,
-        ignore=ignore,
-        max_nesting_level=max_nesting_level,
+        spark, root, pattern=pattern, ignore=ignore, max_nesting_level=max_nesting_level
     )
     meta = enrich_file_meta(raw, root, host=host)
     meta = meta.filter(F.col("size") <= max_file_size)  # F6 cassandra.go:66-69

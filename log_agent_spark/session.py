@@ -31,6 +31,11 @@ _LOCAL_DEFAULTS = {
     # row-group-sized splits and per-task overhead dominates below that.
     "spark.sql.files.maxPartitionBytes": "4194304",
     "spark.sql.files.openCostInBytes": "1048576",
+    # The agent's whole-file reads load explicit lists of local files that
+    # the driver has just walked and stat-ed; past this many paths Spark
+    # lists them again in a distributed job (~0.3-0.9 s of a live batch's
+    # planning, against ms to list them on the driver). Never list in a job.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "2147483647",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     # Fixture parquet has isAdjustedToUTC=false timestamps; read them as

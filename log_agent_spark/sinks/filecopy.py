@@ -10,9 +10,9 @@ volume here is the micro-batch, so a driver-side loop over
 ``toLocalIterator`` writes the rows while the upstream plan stays
 distributed. ``toLocalIterator`` runs one job per partition and holds one
 whole partition in driver memory at a time, so the frame's partitioning
-sets both the job count and the driver's footprint: both whole-file reads
-size their partitions by bytes for that reason
-(sources/binary_files.coalesce_by_bytes). For cluster-scale fan-out to a
+sets both the job count and the driver's footprint: the whole-file read
+of both modes sizes its partitions by bytes for that reason
+(sources/binary_files.read_binary_files). For cluster-scale fan-out to a
 shared filesystem, swap in ``df.write.format('binaryFile')``-less
 per-partition writers; the sink interface (sinks/multi.py) is unchanged.
 """

@@ -1,14 +1,17 @@
 """Whole-file binary ingest source (SURVEY.md §2.1 S1-S3, §2.2 F1-F5, §2.4 M1).
 
-The reference watches directory trees with inotify + a polling walker and
-emits whole files as records. The Spark-first batch form is the built-in
-``binaryFile`` data source: recursive listing, glob pushdown at listing time
-(the analog of the walker's prune-during-walk, fsnotify.go:163-165), and the
-``path/length/modificationTime/content`` columns — no Python in the scan.
-Both reads (the backfill's tree, the live path's batch of files) read
-local files: the driver stats or walks them itself to size the scan by
-bytes, and the tree walk also recovers the zero-byte files Spark's file
-index drops.
+The reference walks directory trees with one walker (WalkDir) behind
+both its live watcher and its history import, and emits whole files as
+records. Here too one driver-side walk (``walk_tree``: Spark's listing
+rules, F1/F2/F5, pruning ignored directories during the walk) lists the
+files of both modes, and one read (``read_binary_files``) turns a set of
+local files into the built-in ``binaryFile`` source's
+``path/length/modificationTime/content`` rows — no Python in the scan.
+The backfill reads what the walk returns; the live source
+(file_events_stream) diffs successive walks, and each batch reads the
+paths it emits. The driver has stat-ed every file it reads, so it sizes
+the scan by bytes and recovers the zero-byte files Spark's file index
+drops.
 
 Enrichment (M1, watchdog.go:328-385) is a pure projection over those
 columns. Create-time has no portable Spark source (ctime vs birth time,
@@ -20,11 +23,12 @@ and let business transforms override.
 from __future__ import annotations
 
 import datetime as dt
-import fnmatch
 import functools
 import math
 import os
+import re
 import socket
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,88 +54,57 @@ BINARY_FILE_SCHEMA = StructType(
 )
 
 
-def read_binary_tree(
-    spark: SparkSession,
+def walk_tree(
     root: str,
-    glob: str | None = None,
     pattern: str | None = None,
     ignore: str | None = None,
     max_nesting_level: int | None = None,
-) -> DataFrame:
-    """Recursive whole-file scan of a local tree with the reference's
-    filter stack.
+) -> dict[str, tuple[int, int]]:
+    """path → (mtime_ns, size) for the files under ``root`` that the agent
+    ships — the one tree walk of both modes (WalkDir, fsnotify.go:148-182):
+    the backfill reads what it returns, the live source diffs it.
 
-    - ``glob``    → pathGlobFilter, applied AT LISTING TIME (cheapest — the
-                    analog of pruning during the walk).
-    - ``pattern``/``ignore`` → F1/F2 regex include/exclude on the full path
-                    (rlike predicates; the listing already shrank the input).
-    - ``max_nesting_level`` → F5 depth bound relative to root (0/None = off).
+    - ``pattern`` → F1 include regex (fsnotify.go:184-190), on file paths;
+    - ``ignore``  → F2 exclude regex (fsnotify.go:192-198), on file paths
+      and on directory paths, so an ignored directory is pruned during the
+      walk (fsnotify.go:163-165);
+    - ``max_nesting_level`` → F5 depth bound (fsnotify.go:174-179): files
+      directly under ``root`` are at level 1; 0/None = off.
 
-    Spark's file index drops ZERO-byte files, but the reference ships them
-    (content "0x" on the wire, kafka.go:323-325): one local walk of the
-    tree (``_walk_tree``) finds them with Spark's own listing rules and
-    unions them as metadata-only rows (content = x''), only when there are
-    any. The same walk sums the bytes the scan reads, and the scan is
-    coalesced by them (``coalesce_by_bytes``): split by openCostInBytes, a
-    tree of small files would spread over one task per core.
+    Both regexes search the plain absolute path. A name is kept only when
+    Spark's listing keeps it (``_spark_lists``), at every level, so the
+    binaryFile read returns every file the walk admits. A path that
+    vanishes (or a dangling link) mid-walk, or a directory it cannot list,
+    is skipped.
     """
-    reader = (
-        spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(root)
-    empties, n_bytes = _walk_tree(root, glob)
-    if empties:
-        df = df.unionByName(spark.createDataFrame(empties, BINARY_FILE_SCHEMA))
-    df = coalesce_by_bytes(df, n_bytes)
-    if pattern and pattern not in (".*", ""):
-        df = df.filter(F.col("path").rlike(pattern))  # F1 fsnotify.go:184-190
-    if ignore:
-        df = df.filter(~F.col("path").rlike(ignore))  # F2 fsnotify.go:192-198
-    if max_nesting_level:
-        rel = sub_dir(F.col("path"), F.lit(f"file:{root}"))
-        depth = F.size(F.split(rel, "/"))
-        df = df.filter(depth <= max_nesting_level)  # F5 fsnotify.go:174-179
-    return df
-
-
-def _walk_tree(root: str, glob: str | None) -> tuple[list[tuple], int]:
-    """One local walk of ``root``: the binaryFile rows of the zero-byte
-    files the scan would list, and the total bytes of the files it reads.
-
-    A name is kept exactly when Spark's listing keeps it
-    (``_spark_lists``), and ``glob`` applies to file names like
-    pathGlobFilter does. Paths and modification times take the binaryFile
-    form: ``file:`` + absolute path, milliseconds.
-    """
-    empties = []
-    n_bytes = 0
-    pending = [os.path.abspath(root)]
+    pat = re.compile(pattern) if pattern else None
+    ign = re.compile(ignore) if ignore else None
+    found: dict[str, tuple[int, int]] = {}
+    pending = [(os.path.abspath(root), 1)]
     while pending:
+        directory, level = pending.pop()
         try:
-            entries = list(os.scandir(pending.pop()))
-        except (FileNotFoundError, NotADirectoryError):
+            entries = list(os.scandir(directory))
+        except OSError:
             continue
         for entry in entries:
             try:
                 is_dir = entry.is_dir()
                 if not _spark_lists(entry.name, is_dir):
                     continue
+                if ign and ign.search(entry.path):
+                    continue
                 if is_dir:
-                    pending.append(entry.path)
+                    if not max_nesting_level or level < max_nesting_level:
+                        pending.append((entry.path, level + 1))
+                    continue
+                if pat and not pat.search(entry.path):
                     continue
                 st = entry.stat()
-            except FileNotFoundError:  # unlinked (or a dangling link) mid-walk
+            except OSError:
                 continue
-            if glob and not fnmatch.fnmatch(entry.name, glob):
-                continue
-            n_bytes += st.st_size
-            if st.st_size == 0:
-                ms = st.st_mtime_ns // 1_000_000
-                mtime = dt.datetime.fromtimestamp(ms / 1000, dt.timezone.utc)
-                empties.append((f"file:{entry.path}", mtime, 0, bytearray()))
-    return empties, n_bytes
+            found[entry.path] = (st.st_mtime_ns, st.st_size)
+    return found
 
 
 def _spark_lists(name: str, is_dir: bool) -> bool:
@@ -152,10 +125,23 @@ def _spark_lists(name: str, is_dir: bool) -> bool:
     return is_dir or not hidden
 
 
+def read_binary_tree(
+    spark: SparkSession,
+    root: str,
+    pattern: str | None = None,
+    ignore: str | None = None,
+    max_nesting_level: int | None = None,
+) -> DataFrame:
+    """Whole-file scan of a local tree with the reference's filter stack
+    (F1/F2/F5, see ``walk_tree``) — the backfill's read: the files of one
+    walk, read like a live batch."""
+    return read_binary_files(spark, walk_tree(root, pattern, ignore, max_nesting_level))
+
+
 def coalesce_by_bytes(df: DataFrame, n_bytes: int) -> DataFrame:
     """``df`` in ceil(n_bytes / spark.sql.files.maxPartitionBytes)
-    partitions, at least one — the byte-sizing rule of both whole-file
-    reads.
+    partitions, at least one — the byte-sizing rule of the whole-file
+    read.
 
     A scan's own split count is at least this bound (its splits hold at
     most maxPartitionBytes, counting openCostInBytes per file), and a
@@ -168,10 +154,10 @@ def coalesce_by_bytes(df: DataFrame, n_bytes: int) -> DataFrame:
     return df.coalesce(max(1, math.ceil(n_bytes / conf.filesMaxPartitionBytes())))
 
 
-def read_binary_files(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """binaryFile rows for a list of local files, read as few partitions
-    as their bytes need — the live path's per-batch read
-    (watchdog.go:314-326).
+def read_binary_files(spark: SparkSession, paths: Iterable[str]) -> DataFrame:
+    """binaryFile rows for local files, read as few partitions as their
+    bytes need — the whole-file read of both modes: a live batch's paths
+    (watchdog.go:314-326) and the backfill's walk.
 
     - A file that no longer exists is skipped: log rotation can unlink it
       between its event and this read (the Handle404 analog,
@@ -179,6 +165,11 @@ def read_binary_files(spark: SparkSession, paths: list[str]) -> DataFrame:
       vanish after the listing; a missing path fails the listing itself with
       PATH_NOT_FOUND, so the paths are stat-ed first and, when one vanishes
       between the stat and the listing, stat-ed again.
+    - Spark's file index drops ZERO-byte files, but the reference ships them
+      (content "0x" on the wire, kafka.go:323-325): only the non-empty files
+      are read, and the empty ones are unioned as metadata-only rows
+      (content = x'') built from the stat, only when there are any.
+    - The paths are literal: a glob character in a file name matches itself.
     - The scan is coalesced by the files' bytes (``coalesce_by_bytes``):
       each driver-side consumer (toLocalIterator, show) runs one job per
       partition, and split by openCostInBytes a few small files would
@@ -188,35 +179,53 @@ def read_binary_files(spark: SparkSession, paths: list[str]) -> DataFrame:
     """
     from pyspark.errors import AnalysisException
 
-    present = _file_sizes(paths)
-    while present:
+    present = _stat_files(paths)
+    while True:
         try:
-            raw = (
-                spark.read.format("binaryFile")
-                .option("ignoreMissingFiles", "true")
-                .load(list(present))
-            )
+            return _read_stated(spark, present)
         except AnalysisException as exc:
-            still = _file_sizes(present)
+            still = _stat_files(present)
             if exc.getCondition() != "PATH_NOT_FOUND" or len(still) == len(present):
                 raise
             present = still
-            continue
-        return coalesce_by_bytes(raw, sum(present.values()))
-    return spark.range(0).select(
-        *(F.lit(None).cast(f.dataType).alias(f.name) for f in BINARY_FILE_SCHEMA)
-    )
 
 
-def _file_sizes(paths) -> dict[str, int]:
-    """path → size in bytes for the paths that still exist."""
-    sizes = {}
+def _read_stated(spark: SparkSession, stats: dict[str, tuple[int, int]]) -> DataFrame:
+    """read_binary_files over ``path → (mtime_ns, size)`` stats."""
+    if not stats:
+        return spark.range(0).select(
+            *(F.lit(None).cast(f.dataType).alias(f.name) for f in BINARY_FILE_SCHEMA)
+        )
+    full = [p for p, (_, size) in stats.items() if size]
+    empties = [  # binaryFile's form: file: + absolute path, a millisecond mtime
+        (f"file:{p}", dt.datetime.fromtimestamp(mtime_ns // 10**6 / 1000, dt.timezone.utc), 0, b"")
+        for p, (mtime_ns, size) in stats.items()
+        if not size
+    ]
+    df = None
+    if full:
+        df = (
+            spark.read.format("binaryFile")
+            .option("ignoreMissingFiles", "true")
+            .option("__globPaths__", "false")  # DataSource.GLOB_PATHS_KEY
+            .load(full)
+        )
+    if empties:
+        rows = spark.createDataFrame(empties, BINARY_FILE_SCHEMA)
+        df = rows if df is None else df.unionByName(rows)
+    return coalesce_by_bytes(df, sum(size for _, size in stats.values()))
+
+
+def _stat_files(paths: Iterable[str]) -> dict[str, tuple[int, int]]:
+    """path → (mtime_ns, size) for the paths that still exist."""
+    stats = {}
     for p in paths:
         try:
-            sizes[p] = os.stat(p).st_size
+            st = os.stat(p)
         except (FileNotFoundError, NotADirectoryError):
             continue
-    return sizes
+        stats[p] = (st.st_mtime_ns, st.st_size)
+    return stats
 
 
 def enrich_file_meta(df: DataFrame, root: str, host: str | None = None) -> DataFrame:

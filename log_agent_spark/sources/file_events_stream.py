@@ -9,8 +9,11 @@ by Spark, which also gives deterministic replay (`readBetweenOffsets`)
 instead of the reference's hand-rolled commit.
 
 The per-path debounce (T1, `watchdog.go:193-251`) lives here too, in front
-of the batcher as in the reference. Each `read` walks the tree (bounded
-depth, include/ignore regex — F1, F2, F5); a path whose stat differs from
+of the batcher as in the reference. Each `read` walks the tree with the
+backfill's walker (`binary_files.walk_tree`: Spark's listing rules, then
+bounded depth and include/ignore regex — F1, F2, F5 — on the plain path),
+so every path it emits is one the batch's read returns and one a backfill
+of the same tree ships; a path whose stat differs from
 its pending entry (or, if none, from its settled entry) (re)starts its
 timer; a path quiet for `debounce_ms` settles into the offset and is
 emitted once, CREATE if it was absent from the previous offset, else WRITE
@@ -37,8 +40,6 @@ Usage:
 from __future__ import annotations
 
 import datetime as dt
-import os
-import re
 import time
 from collections.abc import Iterator
 
@@ -51,6 +52,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from log_agent_spark.sources.binary_files import walk_tree
+
 FILE_EVENT_SCHEMA = StructType(
     [
         StructField("path", StringType(), False),
@@ -59,35 +62,6 @@ FILE_EVENT_SCHEMA = StructType(
         StructField("mod_time", TimestampType(), True),
     ]
 )
-
-
-def _walk(root: str, pattern: str | None, ignore: str | None, max_depth: int) -> dict[str, tuple[int, int]]:
-    """path → (mtime_ns, size) snapshot with F1/F2/F5 filters applied."""
-    pat = re.compile(pattern) if pattern else None
-    ign = re.compile(ignore) if ignore else None
-    snap: dict[str, tuple[int, int]] = {}
-    root = root.rstrip("/")
-    for dirpath, dirnames, filenames in os.walk(root):
-        rel = os.path.relpath(dirpath, root)
-        depth = 0 if rel == "." else rel.count(os.sep) + 1
-        if max_depth and depth >= max_depth:  # F5 fsnotify.go:174-179
-            dirnames[:] = []
-            continue
-        if ign and ign.search(dirpath):  # prune during walk, fsnotify.go:163-165
-            dirnames[:] = []
-            continue
-        for name in filenames:
-            p = os.path.join(dirpath, name)
-            if pat and not pat.search(p):  # F1
-                continue
-            if ign and ign.search(p):  # F2
-                continue
-            try:
-                st = os.stat(p)
-            except OSError:  # raced remove — Handle404 analog
-                continue
-            snap[p] = (st.st_mtime_ns, st.st_size)
-    return snap
 
 
 def _diff(start: dict, end: dict) -> list[tuple]:
@@ -121,7 +95,7 @@ class FileEventsStreamReader(SimpleDataSourceStreamReader):
         return {"files": {}}
 
     def _snapshot(self) -> dict[str, tuple[int, int]]:
-        return _walk(self.root, self.pattern, self.ignore, self.max_depth)
+        return walk_tree(self.root, self.pattern, self.ignore, self.max_depth)
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         settled = _files(start)

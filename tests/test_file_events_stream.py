@@ -5,17 +5,18 @@ and the per-path debounce (T1) held by the reader."""
 from __future__ import annotations
 
 import os
+import re
 import time
 import uuid
 
 import pytest
 
 from log_agent_spark.sources import file_events_stream as fes
+from log_agent_spark.sources.binary_files import read_binary_files, read_binary_tree, walk_tree
 from log_agent_spark.sources.file_events_stream import (
     FileEventsDataSource,
     FileEventsStreamReader,
     _diff,
-    _walk,
 )
 
 
@@ -30,11 +31,11 @@ def test_walk_filters(tmp_path):
     (root / "deep" / "c.log").write_bytes(b"x")
     (root / "deep/deeper" / "d.log").write_bytes(b"x")
 
-    snap = _walk(str(root), pattern=r"\.log$", ignore=None, max_depth=0)
+    snap = walk_tree(str(root), pattern=r"\.log$")
     assert {os.path.basename(p) for p in snap} == {"a.log", "c.log", "d.log"}
-    snap = _walk(str(root), pattern=r"\.log$", ignore=r"deeper", max_depth=0)
+    snap = walk_tree(str(root), pattern=r"\.log$", ignore=r"deeper")
     assert {os.path.basename(p) for p in snap} == {"a.log", "c.log"}
-    snap = _walk(str(root), pattern=None, ignore=None, max_depth=1)
+    snap = walk_tree(str(root), max_nesting_level=1)
     assert {os.path.basename(p) for p in snap} == {"a.log", "b.tmp"}
 
 
@@ -50,6 +51,42 @@ def test_diff_ops():
 
 def test_diff_size_change_with_same_mtime_is_a_write():
     assert [r[:2] for r in _diff({"/a": (100, 1)}, {"/a": (100, 7)})] == [("/a", "WRITE")]
+
+
+def test_backfill_and_live_ship_the_same_files(spark, tmp_path):
+    """One tree, every filter: the backfill read, the live source's walk
+    and the live read of what the walk emits give one path set, so no
+    emitted path is lost by the read (a glob character in a name, too)."""
+    root = tmp_path / "tree"
+    for rel in (
+        "a.log", "b.txt", "c[1].log", ".hidden.log", "_under.log", "x.log._COPYING_",
+        "_tmp/in_tmp.log", ".cache/in_cache.log", "_day=1/p.log", "skip/s.log",
+        "sub/deep.log", "sub/empty.log", "sub/skip/s.log", "sub/deeper/d.log",
+    ):
+        path = root / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(b"" if rel == "sub/empty.log" else rel.encode())
+    anchored = f"^{re.escape(str(root))}/.*\\.log$"
+    logs = {"a.log", "c[1].log", "_day=1/p.log", "skip/s.log", "sub/deep.log", "sub/empty.log"}
+    cases = [
+        ({}, logs | {"b.txt", "sub/skip/s.log", "sub/deeper/d.log"}),
+        ({"ignore": "/skip$"}, logs - {"skip/s.log"} | {"b.txt", "sub/deeper/d.log"}),
+        ({"max_nesting_level": 1}, {"a.log", "b.txt", "c[1].log"}),
+        ({"max_nesting_level": 2}, logs | {"b.txt"}),
+        ({"pattern": anchored}, logs | {"sub/skip/s.log", "sub/deeper/d.log"}),
+        ({"pattern": anchored, "ignore": "/skip$", "max_nesting_level": 2}, logs - {"skip/s.log"}),
+    ]
+
+    def rel(paths):
+        return {p.removeprefix("file:").removeprefix(f"{root}/") for p in paths}
+
+    for case, expected in cases:
+        backfill = rel(r.path for r in read_binary_tree(spark, str(root), **case).collect())
+        options = {"path": str(root), **{k: str(v) for k, v in case.items()}}
+        rows, _ = FileEventsStreamReader(options).read({"files": {}})
+        emitted = sorted(r[0] for r in rows)
+        live = rel(r.path for r in read_binary_files(spark, emitted).collect())
+        assert backfill == rel(emitted) == live == expected, case
 
 
 # ---------------------------------------------------------------------------

@@ -121,8 +121,8 @@ def test_zero_byte_files_are_ingested(spark, tmp_path):
     assert bytes(rows["empty.log"].content) == b""
     assert rows["empty.log"].modificationTime is not None
 
-    # glob applies to recovered empties exactly like pathGlobFilter
-    only_log = read_binary_tree(spark, str(tree), glob="*.log")
+    # the include pattern applies to recovered empties like to read files
+    only_log = read_binary_tree(spark, str(tree), pattern=r"\.log$")
     assert only_log.count() == 2
 
     # FileMeta enrichment reuses its once-built projection across frames
@@ -161,13 +161,13 @@ def test_zero_byte_files_are_ingested(spark, tmp_path):
             path.write_bytes(data)
             os.utime(path, ns=(mtime_ns, mtime_ns))
 
-    for glob in (None, "*.log"):
+    for pattern in (None, r"\.log$"):
         listed = {
             r.path.removeprefix(f"file:{rules}/"): r
-            for r in read_binary_tree(spark, str(rules), glob=glob).collect()
+            for r in read_binary_tree(spark, str(rules), pattern=pattern).collect()
         }
         for empty, full in twins:
-            assert (empty in listed) == (full in listed), (glob, empty, sorted(listed))
+            assert (empty in listed) == (full in listed), (pattern, empty, sorted(listed))
             if empty in listed:
                 assert listed[empty].length == 0
                 assert listed[empty].modificationTime == listed[full].modificationTime
@@ -175,7 +175,7 @@ def test_zero_byte_files_are_ingested(spark, tmp_path):
             assert rel in listed
         for rel in (".cache/empty.log", "_tmp/empty.log", "sub/a.log._COPYING_"):
             assert rel not in listed
-        assert ("sub/empty.txt" in listed) == (glob is None)
+        assert ("sub/empty.txt" in listed) == (pattern is None)
 
 
 def test_ingest_scan_is_sized_by_bytes(spark, tmp_path):

@@ -1,11 +1,13 @@
 """The live path's per-batch read (``__main__._stream_enrich`` over
 ``sources/binary_files.read_binary_files``): vanished files are skipped,
-and the sink chain runs one job per driver-side sink for a small batch and
-none for an empty one."""
+empty files are shipped, no Spark job lists a batch, and the sink chain
+runs one job per driver-side sink for a small batch and none for an empty
+one."""
 
 from __future__ import annotations
 
 import itertools
+import os
 
 from log_agent_spark.__main__ import _stream_enrich
 from log_agent_spark.config import BizConfig
@@ -60,18 +62,55 @@ def test_path_vanishing_after_the_stat_is_skipped(spark, tmp_path, monkeypatch):
     present = tmp_path / "a.log"
     present.write_bytes(b"alpha")
     gone = str(tmp_path / "gone.log")
-    real = binary_files._file_sizes
+    real = binary_files._stat_files
     calls = []
 
     def stale_first(paths):
         calls.append(list(paths))
-        sizes = real(paths)
-        return {**sizes, gone: 3} if len(calls) == 1 else sizes
+        stats = real(paths)
+        return {**stats, gone: (0, 3)} if len(calls) == 1 else stats
 
-    monkeypatch.setattr(binary_files, "_file_sizes", stale_first)
+    monkeypatch.setattr(binary_files, "_stat_files", stale_first)
     rows = binary_files.read_binary_files(spark, [str(present), gone]).collect()
     assert [r.path.removeprefix("file:") for r in rows] == [str(present)]
     assert len(calls) == 2
+
+
+def test_zero_byte_file_is_shipped(spark, tmp_path):
+    """Spark's file index drops 0-byte files; the live read ships them as
+    the reference does (content "0x" on the wire, kafka.go:323-325): one
+    row with length 0 and the stat's mtime, copied as an empty file."""
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    empty = watch / "empty.log"
+    empty.write_bytes(b"")
+    mtime_ns = 1_700_000_000_123_456_789
+    os.utime(empty, ns=(mtime_ns, mtime_ns))
+    (watch / "full.log").write_bytes(b"x")
+
+    raw = binary_files.read_binary_files(spark, [str(empty)]).collect()
+    assert [(r.path, r.length, bytes(r.content)) for r in raw] == [(f"file:{empty}", 0, b"")]
+    assert round(raw[0].modificationTime.timestamp() * 1000) == mtime_ns // 1_000_000
+
+    frame = _enrich(watch)(_batch(spark, [empty, watch / "full.log"]))
+    assert sorted((r.filename, r.size) for r in frame.collect()) == [("empty.log", 0), ("full.log", 1)]
+    dest = tmp_path / "dest"
+    file_copy_sink(str(dest)).write(frame)
+    assert (dest / "empty.log").read_bytes() == b""
+    assert round((dest / "empty.log").stat().st_mtime_ns / 1e6) == mtime_ns // 1_000_000
+
+
+def test_large_batch_is_listed_without_a_job(spark, tmp_path):
+    """Past Spark's parallel-listing threshold (32 paths) a batch's files
+    are still listed on the driver: building the read runs no job."""
+    paths = []
+    for i in range(40):
+        f = tmp_path / f"f{i:02d}.log"
+        f.write_bytes(b"x" * (i + 1))
+        paths.append(str(f))
+    frames = []
+    assert _jobs(spark, lambda: frames.append(binary_files.read_binary_files(spark, paths))) == 0
+    assert frames[0].count() == 40
 
 
 def test_sink_chain_job_shape(spark, tmp_path):
@@ -80,9 +119,9 @@ def test_sink_chain_job_shape(spark, tmp_path):
     watch = tmp_path / "watch"
     watch.mkdir()
     files = []
-    for i in range(6):
+    for i in range(7):
         f = watch / f"f{i}.log"
-        f.write_bytes(bytes([65 + i]) * 1000)
+        f.write_bytes(bytes([65 + i]) * 1000 if i < 6 else b"")  # f6 is empty
         files.append(f)
     enrich = _enrich(watch)
     jobs: dict[str, int] = {}
