@@ -11,7 +11,10 @@ cmd/run.go): parse the ini, build one pipeline per active biz section
   debounce (T1) in the source, one row per settled path (T3) → per-batch
   content enrichment (M1, reading only the batch's files) → priority
   multi-sink fan-out (K4 console, K3 file-copy when ``--copy-dest`` is
-  given), checkpointed (T4). Runs until ``--duration`` elapses or Ctrl-C.
+  given), checkpointed (T4). Every pipeline runs in one
+  ``streaming/supervisor.serve`` loop until ``--duration`` elapses, all
+  have ended, or Ctrl-C; ``--supervise`` restarts a failed one from its
+  checkpoint, otherwise a failure ends it.
 
 Example::
 
@@ -22,6 +25,7 @@ Example::
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import re
 import sys
@@ -115,6 +119,13 @@ def main(argv: list[str] | None = None) -> int:
         print("no active pipelines (global switch off or no watch sections)")
         return 0
 
+    if args.mode == "stream" and args.supervise and not args.checkpoint:
+        # a restart without a checkpoint recomputes from scratch and
+        # re-delivers everything — refuse rather than silently break the
+        # flag's resume contract
+        print("--supervise requires --checkpoint", file=sys.stderr)
+        return 2
+
     spark = get_spark("log-agent")
     if args.mode == "backfill":
         from log_agent_spark.plans.ingest import write_logfile
@@ -137,10 +148,12 @@ def main(argv: list[str] | None = None) -> int:
                 df.show(20, truncate=80)
         return 0
 
-    # stream mode
+    # stream mode: one serve loop over every biz; fail-fast is max_restarts=0,
+    # --supervise is the S4 watcher guard (crash → restart from checkpoint)
     from log_agent_spark.sinks.filecopy import file_copy_sink
     from log_agent_spark.sinks.multi import MultiSink, console_sink
     from log_agent_spark.streaming.pipeline import run_event_pipeline
+    from log_agent_spark.streaming.supervisor import serve
 
     def _start(cfg):
         sinks = [console_sink(priority=0)]
@@ -155,139 +168,45 @@ def main(argv: list[str] | None = None) -> int:
             if args.checkpoint
             else None
         )
-        return run_event_pipeline(
+        q = run_event_pipeline(
             read_file_events(spark, cfg),
             MultiSink(sinks),
             transform=_stream_enrich(cfg),
             checkpoint_dir=ckpt,
         )
-
-    def _wait(alive) -> None:
-        """Poll until --duration elapses, everything is dead, or Ctrl-C."""
-        try:
-            if args.duration is not None:
-                deadline = time.time() + args.duration
-                while time.time() < deadline and alive():
-                    time.sleep(0.5)
-            else:
-                while alive():
-                    time.sleep(1.0)
-        except KeyboardInterrupt:
-            pass
-
-    if args.supervise:
-        # S4 watcher-guard parity: one supervisor thread per biz restarts
-        # a crashed query from its checkpoint (fsnotify.go:74 probe loop)
-        import threading
-
-        from log_agent_spark.streaming.supervisor import supervise
-
-        if not args.checkpoint:
-            # a restart without a checkpoint recomputes from scratch and
-            # re-delivers everything — refuse rather than silently break
-            # the flag's resume contract
-            print("--supervise requires --checkpoint", file=sys.stderr)
-            return 2
-
-        stop_evt = threading.Event()
-        holders: list[dict] = []
-        threads: list[threading.Thread] = []
-        for cfg in cfgs:
-            holder: dict = {
-                "name": cfg.name, "q": None, "error": None, "restarts": 0
-            }
-
-            def _run(cfg=cfg, holder=holder):
-                def _fresh():
-                    q = holder["q"] = _start(cfg)
-                    return q
-
-                def _note(i, exc):
-                    holder["restarts"] = i
-                    print(f"[{cfg.name}] restart {i}: {exc}", file=sys.stderr)
-
-                try:
-                    _, n = supervise(
-                        _fresh,
-                        max_restarts=args.max_restarts,
-                        on_restart=_note,
-                        should_stop=stop_evt.is_set,
-                    )
-                    if n:
-                        print(f"[{cfg.name}] recovered after {n} restart(s)")
-                except Exception as exc:  # restarts exhausted
-                    holder["error"] = exc
-
-            t = threading.Thread(target=_run, daemon=True)
-            t.start()
-            holders.append(holder)
-            threads.append(t)
-            print(f"[{cfg.name}] streaming (supervised) from {cfg.watch}")
-
-        # don't start the --duration clock until every pipeline has either
-        # come up or already failed — otherwise a short duration measures
-        # Spark startup, not streaming time (bounded by a startup timeout)
-        startup_deadline = time.time() + 120
-        while time.time() < startup_deadline and any(
-            h["q"] is None and h["error"] is None and t.is_alive()
-            for h, t in zip(holders, threads)
-        ):
-            time.sleep(0.2)
-
-        _wait(lambda: any(t.is_alive() for t in threads))
-
-        # shutdown: flag first (no thread will start another query past
-        # this point — supervise checks it before every restart), then
-        # stop whatever is live, re-checking until the threads drain (a
-        # thread mid-start can surface a fresh query after our first pass)
-        stop_evt.set()
-        join_deadline = time.time() + 90
-        while any(t.is_alive() for t in threads) and time.time() < join_deadline:
-            for holder in holders:
-                q = holder["q"]
-                if q is not None and q.isActive:
-                    q.stop()  # clean stop → awaitTermination returns
-            for t in threads:
-                t.join(timeout=1.0)
-
-        failed = 0
-        for holder, t in zip(holders, threads):
-            if holder["error"] is not None:
-                failed += 1
-                print(
-                    f"[{holder['name']}] FAILED after {holder['restarts']} "
-                    f"restart(s): {holder['error']}",
-                    file=sys.stderr,
-                )
-            elif t.is_alive():
-                failed += 1
-                print(
-                    f"[{holder['name']}] did not shut down cleanly",
-                    file=sys.stderr,
-                )
-            else:
-                print(f"[{holder['name']}] stopped")
-        return 1 if failed else 0
-
-    queries = []
-    for cfg in cfgs:
-        queries.append((cfg.name, _start(cfg)))
         print(f"[{cfg.name}] streaming from {cfg.watch}")
+        return q
 
-    _wait(lambda: any(q.isActive for _, q in queries))
-    failed = 0
-    for name, q in queries:
-        if q.isActive:
-            q.stop()
-            print(f"[{name}] stopped")
-        elif q.exception() is not None:
-            # a dead query must not exit 0 — a supervisor (systemd, the
-            # watcher-guard pattern) needs the failure to restart on
-            failed += 1
-            print(f"[{name}] FAILED: {q.exception()}", file=sys.stderr)
+    deadline = None
+
+    def _elapsed() -> bool:
+        # serve first asks once every pipeline has started or failed to
+        # start, so a short --duration measures streaming, not Spark startup
+        nonlocal deadline
+        if deadline is None:
+            deadline = time.monotonic() + args.duration
+        return time.monotonic() >= deadline
+
+    def _note(name, i, exc):
+        print(f"[{name}] restart {i}: {exc}", file=sys.stderr)
+
+    outcome = serve(
+        {cfg.name: functools.partial(_start, cfg) for cfg in cfgs},
+        max_restarts=args.max_restarts if args.supervise else 0,
+        on_restart=_note,
+        stop=None if args.duration is None else _elapsed,
+    )
+    for name, (restarts, error) in outcome.items():
+        if error is not None:
+            print(
+                f"[{name}] FAILED after {restarts} restart(s): {error}",
+                file=sys.stderr,
+            )
         else:
-            print(f"[{name}] stopped")
-    return 1 if failed else 0
+            print(f"[{name}] stopped after {restarts} restart(s)")
+    # a dead query must not exit 0 — a supervisor (systemd, the
+    # watcher-guard pattern) needs the failure to restart on
+    return 1 if any(e is not None for _, e in outcome.values()) else 0
 
 
 if __name__ == "__main__":

@@ -195,7 +195,9 @@ def connected_components_star(
         return out.filter(F.col("u") != F.col("v")).distinct()
 
     prev = _key(m0)
-    for _ in range(max_iter):
+    # as in connected_components: max_iter budgets CHANGING rounds, and a
+    # fixed point is only observable one round later
+    for _ in range(max_iter + 1):
         # r11 (guide §2.4/§5): large-star ∘ small-star FUSED into one
         # checkpoint materialization per round (was two). The large-star
         # output's trailing distinct (Exchange by (u,v) + HashAggregate) is
@@ -213,6 +215,11 @@ def connected_components_star(
         if cur == prev:
             break
         prev = cur
+    else:
+        # the labels of a component still being collapsed may be split
+        raise RuntimeError(
+            f"connected_components_star did not converge in {max_iter} rounds"
+        )
 
     membership = e.select(F.col("v").alias("node"), F.col("u").alias("comp"))
     return (

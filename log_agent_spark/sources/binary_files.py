@@ -208,6 +208,11 @@ def _read_stated(spark: SparkSession, stats: dict[str, tuple[int, int]]) -> Data
             spark.read.format("binaryFile")
             .option("ignoreMissingFiles", "true")
             .option("__globPaths__", "false")  # DataSource.GLOB_PATHS_KEY
+            # the checksum file system builds a `.name.crc` sibling path,
+            # which fails on a `:` in the name (URISyntaxException); the raw
+            # local file system reads the file itself, for this load only
+            .option("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+            .option("fs.file.impl.disable.cache", "true")
             .load(full)
         )
     if empties:

@@ -56,10 +56,11 @@ def test_diff_size_change_with_same_mtime_is_a_write():
 def test_backfill_and_live_ship_the_same_files(spark, tmp_path):
     """One tree, every filter: the backfill read, the live source's walk
     and the live read of what the walk emits give one path set, so no
-    emitted path is lost by the read (a glob character in a name, too)."""
+    emitted path is lost by the read (a glob character or a `:` in a name,
+    too)."""
     root = tmp_path / "tree"
     for rel in (
-        "a.log", "b.txt", "c[1].log", ".hidden.log", "_under.log", "x.log._COPYING_",
+        "a.log", "b.txt", "c[1].log", "e:f.log", ".hidden.log", "_under.log", "x.log._COPYING_",
         "_tmp/in_tmp.log", ".cache/in_cache.log", "_day=1/p.log", "skip/s.log",
         "sub/deep.log", "sub/empty.log", "sub/skip/s.log", "sub/deeper/d.log",
     ):
@@ -67,11 +68,11 @@ def test_backfill_and_live_ship_the_same_files(spark, tmp_path):
         path.parent.mkdir(parents=True, exist_ok=True)
         path.write_bytes(b"" if rel == "sub/empty.log" else rel.encode())
     anchored = f"^{re.escape(str(root))}/.*\\.log$"
-    logs = {"a.log", "c[1].log", "_day=1/p.log", "skip/s.log", "sub/deep.log", "sub/empty.log"}
+    logs = {"a.log", "c[1].log", "e:f.log", "_day=1/p.log", "skip/s.log", "sub/deep.log", "sub/empty.log"}
     cases = [
         ({}, logs | {"b.txt", "sub/skip/s.log", "sub/deeper/d.log"}),
         ({"ignore": "/skip$"}, logs - {"skip/s.log"} | {"b.txt", "sub/deeper/d.log"}),
-        ({"max_nesting_level": 1}, {"a.log", "b.txt", "c[1].log"}),
+        ({"max_nesting_level": 1}, {"a.log", "b.txt", "c[1].log", "e:f.log"}),
         ({"max_nesting_level": 2}, logs | {"b.txt"}),
         ({"pattern": anchored}, logs | {"sub/skip/s.log", "sub/deeper/d.log"}),
         ({"pattern": anchored, "ignore": "/skip$", "max_nesting_level": 2}, logs - {"skip/s.log"}),

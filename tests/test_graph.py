@@ -1,6 +1,7 @@
 """connected_components: known-shape graphs, including a chain whose
 diameter forces multiple propagation rounds."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from log_agent_spark.operators.graph import connected_components
@@ -72,6 +73,17 @@ def test_star_cc_on_long_chain(spark):
     edges = [(i, i + 1) for i in range(199)]
     got = _star_result(spark, 200, edges)
     assert got == {i: 0 for i in range(200)}
+
+
+def test_star_cc_raises_when_its_round_budget_runs_out(spark):
+    """A 64-node chain needs several star rounds; one round must fail
+    loudly, not return labels that may be split."""
+    from log_agent_spark.operators.graph import connected_components_star
+
+    nodes = spark.createDataFrame([(i,) for i in range(64)], "id long")
+    e = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(nodes, e, id_col="id", max_iter=1)
 
 
 def test_star_cc_random_graph_matches_union_find(spark):

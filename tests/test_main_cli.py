@@ -120,7 +120,7 @@ def test_global_switch_off_is_clean_noop(tmp_path):
 
 def test_stream_mode_supervised_copies_files(tmp_path):
     """--supervise: the S4 guard path delivers the same result for a
-    healthy pipeline (threaded supervisor, clean stop at --duration)."""
+    healthy pipeline (serve loop, clean stop at --duration)."""
     watch = str(tmp_path / "watched")
     _write_tree(watch)
     ini = str(tmp_path / "agent.ini")
@@ -164,3 +164,55 @@ def test_check_mode_validates_config_without_spark(tmp_path):
     )
     assert bad.returncode == 1
     assert "config check FAILED" in bad.stderr
+
+
+def _run_broken_copy(tmp_path, *flags):
+    """Stream mode with --copy-dest pointed at a regular file: the file-copy
+    sink raises in the first batch, so the pipeline's query fails."""
+    watch = str(tmp_path / "watched")
+    _write_tree(watch)
+    ini = str(tmp_path / "agent.ini")
+    _write_ini(ini, watch)
+    dest = tmp_path / "not_a_dir"
+    dest.write_text("")
+    return subprocess.run(
+        [sys.executable, "-m", "log_agent_spark",
+         "--config", ini, "--mode", "stream", "--copy-dest", str(dest),
+         "--duration", "120", *flags],
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+
+
+def test_stream_mode_failure_exits_1(tmp_path):
+    proc = _run_broken_copy(tmp_path)
+    assert proc.returncode == 1, proc.stderr[-2000:]
+    assert "[SPI.CLI] FAILED after 0 restart(s)" in proc.stderr
+    assert "restart 1:" not in proc.stderr
+
+
+def test_stream_mode_supervised_gives_up_after_max_restarts(tmp_path):
+    proc = _run_broken_copy(
+        tmp_path, "--supervise", "--max-restarts", "1",
+        "--checkpoint", str(tmp_path / "ckpt"),
+    )
+    assert proc.returncode == 1, proc.stderr[-2000:]
+    assert "[SPI.CLI] restart 1:" in proc.stderr
+    assert "restart 2:" not in proc.stderr
+    assert "[SPI.CLI] FAILED after 1 restart(s)" in proc.stderr
+
+
+def test_supervise_without_checkpoint_exits_2_before_spark(tmp_path, monkeypatch, capsys):
+    from log_agent_spark import session
+    from log_agent_spark.__main__ import main
+
+    def no_spark(*a, **k):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    watch = str(tmp_path / "watched")
+    _write_tree(watch)
+    ini = str(tmp_path / "agent.ini")
+    _write_ini(ini, watch)
+    assert main(["--config", ini, "--mode", "stream", "--supervise"]) == 2
+    assert "--supervise requires --checkpoint" in capsys.readouterr().err

@@ -3,8 +3,11 @@ path — real files landed into a watch tree → the ``file_events`` source
 with its per-path debounce (T1, one row per settled path — T3) → enrich to
 logfile shape (M1-M12) → multi-sink fan-out (K6) with the keyed parquet
 UPSERT (K2) and the broker-free Kafka-RECORD sink (K1 envelope) — run for
-~100+ micro-batches under the supervisor (S4), with the
+~100+ micro-batches under the agent's own run loop
+(``streaming/supervisor.serve``, the S4 watcher guard), with the
 BatchMetricsListener (watchdog.go:309 parity) capturing per-batch latency.
+``serve`` runs on the main thread; its stop predicate arms the injected
+faults and ends the soak once every wave was emitted.
 
 A writer thread lands one wave of PATHS_PER_WAVE files at a time (each
 written to staging, then renamed in), rotating over N_PATHS fixed paths,
@@ -21,7 +24,7 @@ replays absorbed).
 Failure leg (VERDICT r9 item 5): the soak INJECTS two mid-run sink
 crashes (the tests/test_supervisor.py fault pattern — the K2 upsert sink
 raises once, failing that micro-batch) at ~30% and ~60% of the wave
-budget. Each must surface as exactly one supervisor restart that resumes
+budget. Each must surface as exactly one ``serve`` restart that resumes
 from the checkpoint DURING the soak: the restart gate then requires
 restarts >= injected faults, and the idempotence/offset gates prove the
 replayed batches produced no duplicate upserts and no offset growth. The
@@ -128,7 +131,7 @@ def main() -> int:
     from log_agent_spark.sinks.upsert import upsert_parquet
     from log_agent_spark.streaming.metrics import BatchMetricsListener
     from log_agent_spark.streaming.pipeline import run_event_pipeline
-    from log_agent_spark.streaming.supervisor import supervise
+    from log_agent_spark.streaming.supervisor import serve
 
     spark = get_spark("soak", **{"spark.sql.shuffle.partitions": "8"})
     root = tempfile.mkdtemp(prefix="log_agent_soak_")
@@ -171,37 +174,15 @@ def main() -> int:
     listener = BatchMetricsListener()
     spark.streams.addListener(listener)
 
-    queries: list = []
     stop_flag = threading.Event()
 
     def start_query():
-        q = run_event_pipeline(
+        return run_event_pipeline(
             read_file_events(spark, cfg),
             chain,
             checkpoint_dir=ckpt,
             trigger="200 milliseconds",
         )
-        queries.append(q)
-        return q
-
-    restarts_seen: list[int] = []
-    sup_exc: list[BaseException] = []
-
-    def run_supervised():
-        try:
-            _, n = supervise(
-                start_query,
-                max_restarts=5,
-                backoff_s=0.5,
-                on_restart=lambda n, exc: print(f"soak: restart {n}: {exc}"),
-                should_stop=stop_flag.is_set,
-            )
-            restarts_seen.append(n)
-        except BaseException as exc:  # noqa: BLE001 — surfaced in the verdict
-            sup_exc.append(exc)
-
-    t = threading.Thread(target=run_supervised, daemon=True)
-    t.start()
 
     def write_waves():
         for w in range(N_WAVES):
@@ -221,45 +202,42 @@ def main() -> int:
     # Fault schedule: arm one sink crash as each wave fraction is crossed.
     fault_at = sorted({max(2, int(N_WAVES * f)) for f in FAULT_FRACTIONS})
     deadline = time.time() + 600
-    emitted = 0
+    drained_at = None
+
+    def done() -> bool:
+        nonlocal drained_at
+        data_batches = sum(1 for b in listener.batches if b.num_input_rows > 0)
+        if fault_at and data_batches >= fault_at[0] and not fault_armed.is_set():
+            fault_at.pop(0)
+            fault_armed.set()
+            print(f"soak: armed fault injection at batch {data_batches}")
+        if (
+            drained_at is None
+            and not writer.is_alive()
+            and listener.total_rows() >= n_events
+        ):
+            drained_at = time.time()
+        if drained_at is not None:
+            # all waves emitted; a late duplicate would land in this wait
+            return time.time() >= drained_at + max(2.0, DEBOUNCE_MS / 1000 * 3)
+        return time.time() >= deadline
+
     try:
-        while time.time() < deadline:
-            time.sleep(2)
-            if sup_exc:
-                break
-            if os.path.isdir(records_dir):
-                try:
-                    emitted = spark.read.parquet(records_dir).count()
-                except Exception:  # noqa: BLE001 — dir mid-write
-                    emitted = 0
-            data_batches = sum(
-                1 for b in listener.batches if b.num_input_rows > 0
-            )
-            if (
-                fault_at
-                and data_batches >= fault_at[0]
-                and not fault_armed.is_set()
-            ):
-                fault_at.pop(0)
-                fault_armed.set()
-                print(f"soak: armed fault injection at batch {data_batches}")
-            if not writer.is_alive() and listener.total_rows() >= n_events:
-                # all waves emitted; a late duplicate would land in this wait
-                time.sleep(max(2.0, DEBOUNCE_MS / 1000 * 3))
-                break
+        outcome = serve(
+            {cfg.name: start_query},
+            max_restarts=5,
+            backoff_s=0.5,
+            on_restart=lambda name, n, exc: print(f"soak: restart {n}: {exc}"),
+            stop=done,
+        )
     finally:
         stop_flag.set()
         writer.join(timeout=10)
-        for q in queries:
-            try:
-                q.stop()
-            except Exception:  # noqa: BLE001
-                pass
-        t.join(timeout=60)
         spark.streams.removeListener(listener)
+    restarts, sup_exc = outcome[cfg.name]
 
-    if sup_exc:
-        print(f"soak: supervisor exhausted restarts: {sup_exc[0]}")
+    if sup_exc is not None:
+        print(f"soak: supervisor exhausted restarts: {sup_exc}")
         return 2
 
     batches = [b for b in listener.batches if b.num_input_rows > 0]
@@ -288,15 +266,13 @@ def main() -> int:
 
     n_faults = len(faults_fired)
     gates = {
-        # one standing query, bounded restarts; the supervisor thread must
-        # have RETURNED (supervise reports its restart count on clean
-        # shutdown) — a still-wedged thread or a missing report is a
-        # failure, not a pass. Every INJECTED crash must have surfaced as
-        # a restart (>= n_faults proves recovery happened DURING the soak,
-        # not that the faults were somehow swallowed); the ceiling keeps
-        # tolerance for at most a couple of ambient restarts on top.
+        # one standing query, bounded restarts. Every INJECTED crash must
+        # have surfaced as a restart (>= n_faults proves recovery happened
+        # DURING the soak, not that the faults were somehow swallowed); the
+        # ceiling keeps tolerance for at most a couple of ambient restarts
+        # on top.
         f"{n_faults} injected faults all restarted, restarts<=5": (
-            bool(restarts_seen) and n_faults <= restarts_seen[0] <= 5
+            n_faults <= restarts <= 5
         ),
         "both scheduled faults fired": n_faults == len(FAULT_FRACTIONS),
         f">=~{N_WAVES} data micro-batches": len(batches) >= int(N_WAVES * 0.9),
@@ -319,7 +295,7 @@ def main() -> int:
         "waves": N_WAVES,
         "file_writes": n_events,
         "data_batches": len(batches),
-        "restarts": restarts_seen[0] if restarts_seen else None,
+        "restarts": restarts,
         "injected_faults_at_batch": faults_fired,
         "latency_ms": {
             "early_median": early,
