@@ -1357,21 +1357,18 @@ JOIN sizes nb ON nb.source = source_b
 # pairs among the exact survivors, resolved to clusters by connected
 # components, keeping each cluster's root (min doc_id). Output = the
 # surviving corpus. Scale: tier 1 is one hash shuffle; tier 2 touches only
-# LSH-bucket collisions; the component loop is O(cluster diameter) rounds
-# over the sparse dup graph (operators/graph.py notes).
+# LSH-bucket collisions; the components step is one union-find task while
+# the sparse dup graph is small, O(log n) star rounds past that, whatever
+# the cluster diameter (operators/graph.py notes).
 # ---------------------------------------------------------------------------
 @pinned_query("dedup_canon_")
 def q_dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from log_agent_spark.operators.graph import connected_components_star
+    from log_agent_spark.operators.graph import connected_components
 
     docs = with_planted_dups(load_table(spark, sf_dir, "documents"))
     exact_canon = docs.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     pairs = lsh_candidate_pairs(exact_canon)
-    # star variant: the near-dup graph over a full corpus has UNBOUNDED
-    # diameter (a chain of pairwise-similar docs), and min-label
-    # propagation is O(diameter) rounds and now raises on exhaustion —
-    # large-star/small-star converges in O(log n) rounds regardless.
-    comp = connected_components_star(
+    comp = connected_components(
         exact_canon.select("doc_id"),
         pairs,
         id_col="doc_id",

@@ -3,22 +3,17 @@ real dedup pipeline runs AFTER pair generation (operators/dedup.py emits the
 pairs; this module resolves them into duplicate clusters and picks the
 canonical member = min id).
 
-Spark-first shape: iterative min-label propagation expressed as DataFrame
-joins — each round every node adopts the smallest component id among itself
-and its neighbors; convergence in O(graph diameter) rounds. The driver loop
-carries only a single scalar (the label-sum) per round for the convergence
-test; all data stays distributed, and ``localCheckpoint`` truncates the
-lineage each round so plans don't grow unboundedly.
-
-Scale: at 100 TB the dup graph is sparse (pairs come from LSH buckets, so
-|E| ≈ |dup docs|), and diameter of near-dup clusters is small (dups of a doc
-are dups of each other), so a handful of rounds suffice. For adversarial
-graphs (long chains), ``connected_components_star`` implements the
-large-star/small-star rounds of Kiveris et al., "Connected Components in
-MapReduce and Beyond" (SOCC'14) — same join primitives, provably O(log n)
-rounds regardless of diameter (property-tested against union-find on
-chains/cliques/random graphs). The reference has no graph op (SURVEY.md
-§2.7 absent categories); this is a north-star extension.
+``connected_components`` is the one CC entry point. It canonicalizes the
+edge list once, and the edge count that materialization observes picks the
+path: a graph small enough for one task is resolved by union-find there
+(one job), a larger one by the large-star/small-star rounds of Kiveris et
+al., "Connected Components in MapReduce and Beyond" (SOCC'14) — DataFrame
+joins, O(log n) rounds regardless of diameter, each round's edge list
+checkpointed so plans don't grow and the driver sees only a (count,
+hash-sum) witness per round. Both paths are tested against a Python
+union-find on chains, cliques and random graphs. The reference has no
+graph op (SURVEY.md §2.7 absent categories); this is a north-star
+extension.
 """
 
 from __future__ import annotations
@@ -44,86 +39,55 @@ from log_agent_spark.scratch import (
 from log_agent_spark.sources.tables import load_table
 
 
+# Canonical edge count at or below which the whole edge list goes to ONE
+# task running union-find; above it, the large-star/small-star loop. The
+# guard reads the count the canonical checkpoint's witness already
+# observes, so it costs no job. Measured on a 4-core host, local[4],
+# random graphs with |V| ≈ |E|, union-find path vs forced star loop
+# (median wall s; jobs; peak RSS of the union-find task's Python worker):
+#   ~10^3 edges:  0.68 vs  5.67 s;  7 vs 55 jobs; 109 MB
+#   ~10^4 edges:  0.60 vs  5.15 s;  7 vs 56 jobs; 111 MB
+#   ~10^5 edges:  1.20 vs  8.89 s;  7 vs 67 jobs; 134 MB
+#   ~10^6 edges:  7.40 vs 36.06 s;  8 vs 61 jobs; 296 MB (3.5 s in the task)
+# No crossover up to 10^6 here; the bound stops at the largest measured
+# size because the star loop is the path that spreads over executors, so
+# a wider cluster moves the crossover down, and ~300 MB is what one
+# Python worker comfortably holds.
+_UNION_FIND_MAX_EDGES = 1_000_000
+
+
+def _union_find(batches):
+    """``mapInPandas`` body over the canonical ``(u < v)`` edge list in one
+    task: emits one star edge ``(u = root, v = node)`` per non-root node,
+    root = the component's min id. Ids are factorized in sorted order, so
+    the min code is the min id, and any orderable id type round-trips."""
+    import numpy as np
+    import pandas as pd
+
+    frames = [b for b in batches if len(b)]
+    if not frames:
+        return
+    e = pd.concat(frames, ignore_index=True)
+    codes, ids = pd.factorize(pd.concat([e["u"], e["v"]]), sort=True)
+    parent = list(range(len(ids)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    n = len(e)
+    for a, b in zip(codes[:n].tolist(), codes[n:].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    roots = np.fromiter((find(x) for x in range(len(ids))), np.int64, len(ids))
+    members = np.flatnonzero(roots != np.arange(len(ids)))
+    yield pd.DataFrame({"u": ids.take(roots[members]), "v": ids.take(members)})
+
+
 def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
-    """(node → component) where component = min node id reachable.
-
-    ``edges`` may be directed; it is symmetrized here. Isolated nodes keep
-    themselves as their component.
-    """
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    # r11 (guide §5 caching): PIN the symmetrized edge list — every
-    # propagation round is a separate checkpoint JOB, and exchange reuse
-    # only dedups within one job, so an unpinned sym re-executes its
-    # whole upstream (e.g. the quadratic levenshtein pair join in the
-    # dedup consumer) once per round. One materialization, O(rounds)
-    # cache reads; released before returning, so a direct call outside
-    # pinned_query leaves no pins behind but the returned labels (owned by
-    # the caller, as with Spark's own API). Each round's labels checkpoint
-    # is released as soon as the next round's is materialized.
-    sym = pin(
-        sym.union(
-            sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-    )
-
-    # r10 (guide §2.4): the per-round convergence witness rides the
-    # checkpoint materialization as an in-plan observe() metric instead of
-    # a separate agg job — one pass per round, not two.
-    labels, m = pin_checkpoint_observed(
-        nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("comp")),
-        F.sum("comp").alias("s"),
-    )
-    prev_sum = m["s"]
-
-    converged = False
-    # max_iter budgets CHANGING (propagation) rounds; convergence is only
-    # observable one round AFTER labels stabilize, so run up to max_iter+1
-    # iterations — otherwise a graph converging exactly on round max_iter
-    # would raise despite being correctly labeled.
-    for _ in range(max_iter + 1):
-        nbr_min = (
-            sym.join(labels, sym.src == labels.node)
-            .select(F.col("dst").alias("node"), "comp")
-        )
-        # labels only ever decrease → the sum is a monotone convergence
-        # witness; one scalar to the driver per round, no row comparison.
-        prev = labels
-        labels, m = pin_checkpoint_observed(
-            prev.unionByName(nbr_min)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp")),
-            F.sum("comp").alias("s"),
-        )
-        unpin_checkpoint(prev)
-        cur_sum = m["s"]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    sym.unpersist()
-    if not converged:
-        # Min-label propagation needs O(diameter) rounds; exhausting the
-        # budget means a component wider than max_iter hops would get a
-        # silently-split labeling. Fail loudly — callers on unbounded-
-        # diameter graphs should use connected_components_star instead.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds the iteration budget); use "
-            "connected_components_star for diameter-independent convergence"
-        )
-    return labels
-
-
-def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
@@ -131,21 +95,28 @@ def connected_components_star(
     dst_col: str = "dst",
     max_iter: int = 50,
 ) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SOCC'14): converges in
-    O(log n) rounds regardless of graph DIAMETER, where the simple
-    min-label propagation above needs O(diameter) rounds — the difference
-    between 2 and 2000 shuffles on a pathological chain of near-dup docs.
+    """(node → comp) where comp = the min node id reachable; ``edges`` may
+    be directed, and isolated nodes keep themselves as their comp.
 
-    Each round is two half-steps over the canonical edge list:
+    Both paths start from the canonical ``(u < v)`` edge list. A graph of
+    at most ``_UNION_FIND_MAX_EDGES`` edges is resolved by union-find in
+    one task. A larger one runs the large-star/small-star rounds of
+    Kiveris et al., "Connected Components in MapReduce and Beyond"
+    (SOCC'14): O(log n) rounds regardless of graph DIAMETER, each round
+    two half-steps over the edge list:
     - large-star: every node attaches its strictly-larger neighbors to the
       minimum of its neighborhood (keeps tree height collapsing globally),
     - small-star: every node attaches its smaller-or-equal neighbors and
       itself to that minimum (locally stars the remainder).
     Both are one groupBy + one join — plain shuffles, no driver data; the
     convergence witness is a (count, hash-sum) scalar pair per round.
+    ``max_iter`` budgets the rounds; running out raises rather than
+    returning labels that may be split.
 
-    Output schema matches ``connected_components``: (node, comp).
+    Either path ends with star-shaped ``(root, node)`` edges, which a left
+    join maps onto ``nodes``. Every superseded checkpoint is released, so
+    a direct call outside ``pinned_query`` leaves one pin, the one behind
+    the result, owned by the caller (as with Spark's own API).
     """
     # (count, decimal hash-sum) convergence witness, collected in-plan by
     # the SAME job that materializes the round's edge list (r10, guide
@@ -195,31 +166,35 @@ def connected_components_star(
         return out.filter(F.col("u") != F.col("v")).distinct()
 
     prev = _key(m0)
-    # as in connected_components: max_iter budgets CHANGING rounds, and a
-    # fixed point is only observable one round later
-    for _ in range(max_iter + 1):
-        # r11 (guide §2.4/§5): large-star ∘ small-star FUSED into one
-        # checkpoint materialization per round (was two). The large-star
-        # output's trailing distinct (Exchange by (u,v) + HashAggregate) is
-        # an identical subtree at every reference inside the small-star
-        # plan, so ReuseExchange/AQE stage reuse computes it ONCE within
-        # the fused job — the old per-half-step localCheckpoint bought no
-        # dedup, only an extra |E|-row block write + read + job barrier
-        # per round. The convergence witness was always taken from the
-        # small-star output only (the large-star witness was discarded),
-        # so round semantics and the O(log n) bound are unchanged.
-        e, mr = pin_checkpoint_observed(
-            half_step(half_step(e, large=True), large=False), *_witness
-        )
-        cur = _key(mr)
-        if cur == prev:
-            break
-        prev = cur
+    if prev[0] <= _UNION_FIND_MAX_EDGES:  # prev[0]: the canonical edge count
+        out = pin_checkpoint(e.coalesce(1).mapInPandas(_union_find, e.schema))
+        unpin_checkpoint(e)
+        e = out
     else:
-        # the labels of a component still being collapsed may be split
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
-        )
+        # max_iter budgets CHANGING rounds, and a fixed point is only
+        # observable one round later
+        for _ in range(max_iter + 1):
+            # r11 (guide §2.4/§5): large-star ∘ small-star FUSED into one
+            # checkpoint materialization per round. The large-star output's
+            # trailing distinct is an identical subtree at every reference
+            # inside the small-star plan, so ReuseExchange/AQE stage reuse
+            # computes it ONCE within the fused job; the convergence
+            # witness is taken from the small-star output only.
+            out, mr = pin_checkpoint_observed(
+                half_step(half_step(e, large=True), large=False), *_witness
+            )
+            unpin_checkpoint(e)
+            e = out
+            cur = _key(mr)
+            if cur == prev:
+                break
+            prev = cur
+        else:
+            unpin_checkpoint(e)
+            # the labels of a component still being collapsed may be split
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+            )
 
     membership = e.select(F.col("v").alias("node"), F.col("u").alias("comp"))
     return (
@@ -272,13 +247,8 @@ _DEDUP_GRAPH_SQL = """d AS (
 
 @pinned_query("graph_cc_")
 def q_dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # min-label CC is safe here: _dedup_candidate_pairs bounds the graph
-    # to ≤120 nodes at ANY scale (doc_id < 120), and its lang-grouped
-    # loose-prefix edges form near-cliques, so diameter ≪ max_iter; since
-    # r5, exhausting the budget RAISES instead of returning split labels,
-    # so a pathological fixture change fails loudly, never silently.
     nodes, edges = _dedup_candidate_pairs(spark, sf_dir)
-    comp = connected_components(nodes, edges, id_col="doc_id", max_iter=25)
+    comp = connected_components(nodes, edges, id_col="doc_id")
     return comp.select(F.col("node").alias("doc_id"), F.col("comp").alias("component"))
 
 
@@ -318,54 +288,22 @@ def q_graph_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch into the stored CC labels (a spanning contraction) and verify —
     per component size AND per node — that the result equals one-shot CC
     over all edges: CC(CC(old) ∪ Δ) = CC(old ∪ Δ)."""
-    # same ≤120-node near-clique fixture as q_dedup_connected_components
-    # above — min-label CC's O(diameter) budget is safe by the same bound,
-    # and exhaustion raises rather than mislabeling.
     nodes, edges = _dedup_candidate_pairs(spark, sf_dir)
-    # pin: all three CC runs below rebuild their edge input every
-    # propagation round; without this the quadratic levenshtein pair join
-    # would re-execute O(rounds × 3) times
+    # pin: all three CC runs below read their edge input; without this the
+    # quadratic levenshtein pair join would re-execute once per run
     edges = pin(edges)
     is_delta = (F.col("src") * 131 + F.col("dst")) % _CC_IVM_DELTA_MOD == 0
-    # r10, widened r11 (guide §2.6 "overlap independent jobs"): the
-    # one-shot audit CC depends only on the pinned edges, while
-    # labels_old → merged is a sequential two-phase chain — so the
-    # one-shot's convergence loop runs on a driver thread from the START,
-    # overlapping BOTH phases (r10 overlapped only the merged phase):
-    # each loop's per-round checkpoint jobs backfill executor slots the
-    # other's round tail leaves idle; the scheduler interleaves them
-    # FIFO. The first jobs of both threads race to materialize the pin —
-    # Spark's cache block locking computes each partition once and blocks
-    # the other reader, so the pin is still computed once. The thread
-    # runs in a copy of this context, so its pins land in the SAME
-    # pinned_query release list (list.append is atomic), and
-    # inheritable_thread_target carries the JVM thread-locals.
-    import contextvars
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    ctx = contextvars.copy_context()
-
-    def _one_shot():
-        return connected_components(nodes, edges, id_col="doc_id", max_iter=25)
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(inheritable_thread_target(lambda: ctx.run(_one_shot)))
-        labels_old = connected_components(
-            nodes, edges.filter(~is_delta), id_col="doc_id", max_iter=25
-        )
-        # the stored labels as edges: node—comp is a spanning contraction
-        label_edges = labels_old.select(
-            F.col("node").alias("src"), F.col("comp").alias("dst")
-        )
-        merged = connected_components(
-            nodes,
-            label_edges.unionByName(edges.filter(is_delta)),
-            id_col="doc_id",
-            max_iter=25,
-        )
-        one_shot = fut.result()
+    one_shot = connected_components(nodes, edges, id_col="doc_id")
+    labels_old = connected_components(
+        nodes, edges.filter(~is_delta), id_col="doc_id"
+    )
+    # the stored labels as edges: node—comp is a spanning contraction
+    label_edges = labels_old.select(
+        F.col("node").alias("src"), F.col("comp").alias("dst")
+    )
+    merged = connected_components(
+        nodes, label_edges.unionByName(edges.filter(is_delta)), id_col="doc_id"
+    )
 
     # assignment-exact check, not just the size multiset: a contraction
     # bug that permutes node→component assignments while preserving sizes

@@ -299,12 +299,12 @@ def q_er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the match-edge graph is linear in records (n·W candidate
     edges, few survive the score gate), but a dup-heavy load can chain
-    matches into a component whose DIAMETER is unbounded — so resolution
-    uses the large-star/small-star CC (O(log n) rounds regardless of
-    diameter), not min-label propagation; survivorship is one keyed
-    aggregate over cluster labels.
+    matches into a component whose DIAMETER is unbounded — which
+    ``connected_components`` absorbs on both of its paths (one union-find
+    task, or O(log n) star rounds); survivorship is one keyed aggregate
+    over cluster labels.
     """
-    from log_agent_spark.operators.graph import connected_components_star
+    from log_agent_spark.operators.graph import connected_components
 
     # r11 (guide §2.4): consume the UNSORTED pair frame — the report's
     # total order was pure overhead on this path (an n·W-row range sort
@@ -318,7 +318,7 @@ def q_er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(edges.select("dst"))
         .distinct()
     )
-    comp = connected_components_star(
+    comp = connected_components(
         nodes, edges, id_col="custkey"
     ).select(F.col("node").alias("custkey"), "comp")
     c = load_table(spark, sf_dir, "customer").select(

@@ -337,63 +337,6 @@ GROUP BY kind
 
 
 # ---------------------------------------------------------------------------
-# mapInArrow variant of the codec stage: same fake decode, but the batches
-# cross the Python boundary as raw pyarrow RecordBatches — no pandas
-# conversion on either side. For blob-heavy media columns this is the
-# lowest-overhead Python path (pandas wraps every binary cell in a Python
-# object; Arrow keeps the buffers zero-copy until the UDF touches them).
-# Verified equivalent to decode_media_meta in tests.
-# ---------------------------------------------------------------------------
-def decode_media_meta_arrow(media: DataFrame) -> DataFrame:
-    """Same output as decode_media_meta, via DataFrame.mapInArrow."""
-    import pyarrow as pa
-
-    schema = (
-        "media_id long, kind string, width int, height int, "
-        "channels int, sample_rate int, n_bytes long"
-    )
-
-    def _decode(batches):
-        for batch in batches:
-            mids = batch.column("media_id").to_pylist()
-            kinds = batch.column("kind").to_pylist()
-            contents = batch.column("content").to_pylist()
-            cols: dict[str, list] = {
-                "media_id": mids,
-                "kind": kinds,
-                "width": [],
-                "height": [],
-                "channels": [],
-                "sample_rate": [],
-                "n_bytes": [],
-            }
-            for kind, content in zip(kinds, contents):
-                blob = bytes(content)
-                rec = _fake_decode(blob, kind)
-                cols["width"].append(rec["width"])
-                cols["height"].append(rec["height"])
-                cols["channels"].append(rec["channels"])
-                cols["sample_rate"].append(rec["sample_rate"])
-                cols["n_bytes"].append(len(blob))
-            yield pa.RecordBatch.from_pydict(
-                cols,
-                schema=pa.schema(
-                    [
-                        ("media_id", pa.int64()),
-                        ("kind", pa.string()),
-                        ("width", pa.int32()),
-                        ("height", pa.int32()),
-                        ("channels", pa.int32()),
-                        ("sample_rate", pa.int32()),
-                        ("n_bytes", pa.int64()),
-                    ]
-                ),
-            )
-
-    return media.select("media_id", "kind", "content").mapInArrow(_decode, schema)
-
-
-# ---------------------------------------------------------------------------
 # Aspect-ratio bucketing — the batch-packing step of image/video training
 # pipelines (SDXL-style bucketed batching): decoded frames are grouped to
 # the nearest ratio in a fixed ladder so each training batch resizes to

@@ -45,7 +45,9 @@ r3 #5):
   Helpers called OUTSIDE any ``pinned_query`` context (library users
   composing ``connected_components`` etc. directly) get plain
   persist/checkpoint behavior: the caller owns the pins, as with Spark's
-  own API.
+  own API. An iterative helper releases its superseded rounds itself
+  (``unpin_checkpoint``), so a direct ``connected_components`` call leaves
+  one pin, the checkpoint behind its result.
 """
 
 from __future__ import annotations
@@ -163,7 +165,7 @@ def pin_checkpoint_observed(
     round's output, albeit cache-backed) per round. A CollectMetrics node
     rides the checkpoint's materialization for free — the witness arrives
     with the data, halving the per-round job count of every convergence
-    loop (CC, CC-star, and anything else built on this pattern).
+    loop (CC and anything else built on this pattern).
 
     Returns ``(checkpointed_df, {metric_name: value})``. Works in both
     pin_checkpoint modes (localCheckpoint and reliable ``checkpoint()``),

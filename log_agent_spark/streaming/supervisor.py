@@ -48,7 +48,8 @@ def serve(
     """Run the named queries until each has terminated cleanly or failed for
     good, ``stop()`` turns true, or Ctrl-C; return ``{name: (restarts,
     error)}``, where ``error`` is the failure that ended a query once its
-    restarts ran out (None otherwise).
+    restarts ran out, or the one that left it down, waiting out its
+    backoff, when the loop ended (None otherwise).
 
     Each start function must create a FRESH query each call with the same
     checkpointLocation (so a restart resumes, not recomputes). A start that
@@ -62,7 +63,8 @@ def serve(
     and every live one is stopped.
     """
     live: dict[str, StreamingQuery] = {}
-    due: dict[str, float] = {}  # name → monotonic time of its pending restart
+    # name → (monotonic time of its pending restart, the failure behind it)
+    due: dict[str, tuple[float, Exception]] = {}
     restarts = dict.fromkeys(starts, 0)
     errors: dict[str, Exception | None] = dict.fromkeys(starts)
 
@@ -75,7 +77,7 @@ def serve(
             on_restart(name, restarts[name], exc)
         # linear backoff (the reference probes on a fixed 20 s cadence,
         # fsnotify.go:74)
-        due[name] = time.monotonic() + backoff_s * restarts[name]
+        due[name] = (time.monotonic() + backoff_s * restarts[name], exc)
 
     def start(name: str) -> None:
         try:
@@ -97,7 +99,7 @@ def serve(
             if stop is not None and stop():
                 break
             now = time.monotonic()
-            for name in [n for n, t in due.items() if t <= now]:
+            for name in [n for n, (t, _) in due.items() if t <= now]:
                 del due[name]
                 start(name)
     except KeyboardInterrupt:
@@ -105,4 +107,7 @@ def serve(
     finally:
         for q in live.values():
             q.stop()
+    # a query still waiting out its backoff is down, not stopped cleanly
+    for name, (_, exc) in due.items():
+        errors[name] = exc
     return {name: (restarts[name], errors[name]) for name in starts}

@@ -1,9 +1,10 @@
-"""connected_components: known-shape graphs, including a chain whose
-diameter forces multiple propagation rounds."""
+"""connected_components: known-shape graphs on both of its paths, plus the
+other graph operators' invariants."""
 
 import pytest
 from pyspark.sql import functions as F
 
+import log_agent_spark.operators.graph as graph_mod
 from log_agent_spark.operators.graph import connected_components
 
 
@@ -37,7 +38,9 @@ def test_no_edges_identity(spark):
 
 
 # ---------------------------------------------------------------------------
-# Large-star/small-star vs ground truth (union-find) on adversarial shapes.
+# Both connected_components paths vs ground truth (a Python union-find) on
+# adversarial shapes. The star loop is forced by dropping the union-find
+# edge bound to 0.
 # ---------------------------------------------------------------------------
 def _union_find(n_nodes, edges):
     parent = list(range(n_nodes))
@@ -56,77 +59,102 @@ def _union_find(n_nodes, edges):
     return {i: find(i) for i in range(n_nodes)}
 
 
-def _star_result(spark, n_nodes, edges):
-    from log_agent_spark.operators.graph import connected_components_star
+@pytest.fixture
+def star_loop(monkeypatch):
+    """Send every connected_components call down the star loop."""
+    monkeypatch.setattr(graph_mod, "_UNION_FIND_MAX_EDGES", 0)
 
-    nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
-    e = spark.createDataFrame(edges or [(0, 0)], "src long, dst long")
+
+@pytest.fixture(params=["union_find", "star_loop"])
+def cc_path(request, monkeypatch):
+    if request.param == "star_loop":
+        monkeypatch.setattr(graph_mod, "_UNION_FIND_MAX_EDGES", 0)
+    return request.param
+
+
+# ids 0..n-1 as bigints, or as zero-padded strings whose order is the ids'
+_ID_NAMES = {"bigint": int, "string": "n{:04d}".format}
+
+
+def _components(spark, n_nodes, edges, id_type="bigint"):
+    """{i: comp of node i} from connected_components, comp in the ids' type."""
+    name = _ID_NAMES[id_type]
+    nodes = spark.createDataFrame([(name(i),) for i in range(n_nodes)], f"id {id_type}")
+    e = spark.createDataFrame(
+        [(name(a), name(b)) for a, b in edges] or [(name(0), name(0))],
+        f"src {id_type}, dst {id_type}",
+    )
     if not edges:
         e = e.filter("src != src")  # empty edge set, stable schema
-    out = connected_components_star(nodes, e, id_col="id")
-    return {r.node: r.comp for r in out.collect()}
+    out = connected_components(nodes, e, id_col="id")
+    assert out.schema["comp"].dataType.simpleString() == id_type
+    rows = {r.node: r.comp for r in out.collect()}
+    return {i: rows[name(i)] for i in range(n_nodes)}
 
 
-def test_star_cc_on_long_chain(spark):
-    """A 200-node chain has diameter 199 — min-label propagation needs 199
-    rounds; the star algorithm must finish well inside its 50-round cap."""
+def _random_edges(seed, n, m):
+    import random
+
+    rng = random.Random(seed)
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+
+
+_CC_CASES = {
+    "random": (60, _random_edges(7, 60, 40), "bigint"),
+    # two 4-cliques + isolated nodes 8, 9
+    "isolated_and_cliques": (
+        10,
+        [(a, b) for a in range(4) for b in range(a + 1, 4)]
+        + [(a, b) for a in range(4, 8) for b in range(a + 1, 8)],
+        "bigint",
+    ),
+    "no_edges": (5, [], "bigint"),
+    # diameter 299, far past the 25-round budget min-label propagation had
+    "chain_300": (300, [(i + 1, i) for i in range(299)], "bigint"),
+    "string_ids": (40, _random_edges(3, 40, 30), "string"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_cc_paths_agree_with_union_find(spark, cc_path, case):
+    """Fallback equivalence: the one-task union-find path and the star loop
+    both give the ground-truth (node, min id) labels, in the ids' type."""
+    n, edges, id_type = _CC_CASES[case]
+    got = _components(spark, n, edges, id_type)
+    want = {i: _ID_NAMES[id_type](c) for i, c in _union_find(n, edges).items()}
+    assert got == want
+
+
+def test_star_cc_on_long_chain(spark, star_loop):
+    """A 200-node chain has diameter 199; the star loop must finish well
+    inside its 50-round cap."""
     edges = [(i, i + 1) for i in range(199)]
-    got = _star_result(spark, 200, edges)
+    got = _components(spark, 200, edges)
     assert got == {i: 0 for i in range(200)}
 
 
-def test_star_cc_raises_when_its_round_budget_runs_out(spark):
+def test_star_cc_raises_when_its_round_budget_runs_out(spark, star_loop):
     """A 64-node chain needs several star rounds; one round must fail
     loudly, not return labels that may be split."""
-    from log_agent_spark.operators.graph import connected_components_star
-
     nodes = spark.createDataFrame([(i,) for i in range(64)], "id long")
     e = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_star(nodes, e, id_col="id", max_iter=1)
+        connected_components(nodes, e, id_col="id", max_iter=1)
 
 
-def test_star_cc_random_graph_matches_union_find(spark):
-    import random
-
-    rng = random.Random(42)
+def test_star_cc_random_graph_matches_union_find(spark, star_loop):
     n = 120
-    edges = [
-        (rng.randrange(n), rng.randrange(n)) for _ in range(90)
-    ]
-    got = _star_result(spark, n, edges)
+    edges = _random_edges(42, n, 90)
+    got = _components(spark, n, edges)
     want = _union_find(n, edges)
     assert got == want
 
 
-def test_star_cc_isolated_and_cliques(spark):
-    # two 4-cliques + isolated nodes 8, 9
-    c1 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
-    c2 = [(a, b) for a in range(4, 8) for b in range(a + 1, 8)]
-    got = _star_result(spark, 10, c1 + c2)
+def test_star_cc_isolated_and_cliques(spark, star_loop):
+    n, edges, _ = _CC_CASES["isolated_and_cliques"]
+    got = _components(spark, n, edges)
     want = {**{i: 0 for i in range(4)}, **{i: 4 for i in range(4, 8)}, 8: 8, 9: 9}
     assert got == want
-
-
-def test_star_cc_agrees_with_label_propagation(spark):
-    """Same answer as the simple min-label propagation on a graph both can
-    finish (star is the adversarial-diameter replacement, not a different
-    semantics)."""
-    import random
-
-    from log_agent_spark.operators.graph import connected_components
-
-    rng = random.Random(7)
-    n = 60
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(40)]
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    e = spark.createDataFrame(edges, "src long, dst long")
-    simple = {
-        r.node: r.comp
-        for r in connected_components(nodes, e, id_col="id").collect()
-    }
-    star = _star_result(spark, n, edges)
-    assert star == simple
 
 
 def test_pagerank_invariants(spark):
@@ -267,13 +295,11 @@ def test_pagerank_closed_form_equals_iterative_loop(spark, monkeypatch):
     assert fast == slow and len(fast) > 0
 
 
-def test_star_cc_one_materialization_per_round(spark, monkeypatch):
+def test_star_cc_one_materialization_per_round(spark, star_loop, monkeypatch):
     """r11 fusion: each large∘small star round materializes ONCE (one
     pin_checkpoint_observed call per round, plus one for the canonical
     edge list) — the pre-r11 form checkpointed each half-step separately,
     costing an extra |E|-row block write + read + job barrier per round."""
-    import log_agent_spark.operators.graph as graph_mod
-
     calls = {"n": 0}
     real = graph_mod.pin_checkpoint_observed
 
@@ -288,7 +314,7 @@ def test_star_cc_one_materialization_per_round(spark, monkeypatch):
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)] +
                                   [(i,) for i in range(10, 14)], "id long")
     e = spark.createDataFrame(edges, "src long, dst long")
-    out = graph_mod.connected_components_star(nodes, e, id_col="id")
+    out = graph_mod.connected_components(nodes, e, id_col="id")
     got = {r["node"]: r["comp"] for r in out.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1,
                    10: 10, 11: 10, 12: 10, 13: 10}
@@ -305,7 +331,7 @@ def test_star_cc_one_materialization_per_round(spark, monkeypatch):
     calls["n"] = 0
     tiny_nodes = spark.createDataFrame([(1,), (2,)], "id long")
     tiny_e = spark.createDataFrame([(1, 2)], "src long, dst long")
-    graph_mod.connected_components_star(tiny_nodes, tiny_e, id_col="id").collect()
+    graph_mod.connected_components(tiny_nodes, tiny_e, id_col="id").collect()
     assert calls["n"] == 2, f"expected 2 materializations, saw {calls['n']}"
 
 

@@ -110,22 +110,6 @@ def test_range_join_band_and_bucket_edges(spark):
     assert got == [10, 11]
 
 
-def test_decode_media_meta_arrow_equivalent(spark, sf_dir):
-    """mapInArrow codec stage produces exactly the mapInPandas results."""
-    from log_agent_spark.operators.multimodal import (
-        decode_media_meta,
-        decode_media_meta_arrow,
-        media_corpus,
-    )
-    from log_agent_spark.sources.tables import load_table
-
-    media = media_corpus(load_table(spark, sf_dir, "documents"))
-    a = {r.media_id: r for r in decode_media_meta(media).collect()}
-    b = {r.media_id: r for r in decode_media_meta_arrow(media).collect()}
-    assert len(a) == len(b) > 0
-    assert all(a[k] == b[k] for k in a)
-
-
 def test_shard_manifest_partitions_every_byte(spark, sf_dir):
     """Next-fit invariants: shard ids are contiguous from 0 per (kind,
     bucket), shard bytes sum to the bucket's total, and no shard exceeds

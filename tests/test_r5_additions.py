@@ -289,28 +289,6 @@ def test_er_features_tolerate_malformed_name(spark, tmp_path):
         assert r.agree_name_tail is None or r.rec_a == 3 or r.rec_b == 3
 
 
-def test_connected_components_raises_on_iteration_exhaustion(spark):
-    """Min-label CC must fail loudly when the graph diameter exceeds the
-    iteration budget instead of returning silently-split labels."""
-    import pytest
-
-    from log_agent_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    n = 12  # a 12-node path has diameter 11 > max_iter=3
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, edges, max_iter=3).collect()
-    # the star variant collapses the same chain in O(log n) rounds
-    out = connected_components_star(nodes, edges, max_iter=6).collect()
-    assert {r.comp for r in out} == {0}
-
-
 def test_er_match_pairs_single_window_sort(spark):
     """All W lead() projections share one window spec → exactly one
     WindowExec (one shuffle+sort), not one per neighbor rank."""

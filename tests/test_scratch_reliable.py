@@ -58,8 +58,8 @@ def test_graph_family_identical_under_reliable_checkpoint(spark, tmp_path):
 def test_pin_checkpoint_observed_both_modes(spark, tmp_path):
     """r10: the fused convergence witness (observe() metrics collected by
     the checkpoint materialization itself) must return the same values as
-    a separate agg, in BOTH checkpoint modes — the CC/CC-star loops now
-    depend on it."""
+    a separate agg, in BOTH checkpoint modes — connected_components
+    depends on it."""
     from pyspark.sql import functions as F
 
     df = spark.range(100).selectExpr("id", "id * 3 AS v")
@@ -79,21 +79,24 @@ def test_pin_checkpoint_observed_both_modes(spark, tmp_path):
         )
 
 
-def test_cc_star_identical_under_reliable_checkpoint(spark, tmp_path):
-    """CC-star's witness now rides the checkpoint job; results must stay
-    identical in reliable mode (which exercises the persist-around-
-    checkpoint path of the observed variant)."""
-    from log_agent_spark.operators.graph import connected_components_star
+def test_cc_star_identical_under_reliable_checkpoint(spark, tmp_path, monkeypatch):
+    """connected_components' witness rides the checkpoint job; results must
+    stay identical in reliable mode (which exercises the persist-around-
+    checkpoint path of the observed variant), on the union-find path and
+    on the star loop (forced by a 0 edge bound)."""
+    from log_agent_spark.operators import graph
 
     nodes = spark.createDataFrame([(i,) for i in range(8)], "id bigint")
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (3, 4), (6, 7)], "src bigint, dst bigint"
     )
-    base = sorted(map(tuple, connected_components_star(nodes, edges).collect()))
-    with _checkpoint_dir(spark, tmp_path):
-        rel = sorted(
-            map(tuple, connected_components_star(nodes, edges).collect())
-        )
-    assert rel == base
-    comp = dict(base)
-    assert comp[1] == comp[0] and comp[4] == comp[3] and comp[5] == 5
+    for bound in (graph._UNION_FIND_MAX_EDGES, 0):
+        monkeypatch.setattr(graph, "_UNION_FIND_MAX_EDGES", bound)
+        base = sorted(map(tuple, graph.connected_components(nodes, edges).collect()))
+        with _checkpoint_dir(spark, tmp_path):
+            rel = sorted(
+                map(tuple, graph.connected_components(nodes, edges).collect())
+            )
+        assert rel == base
+        comp = dict(base)
+        assert comp[1] == comp[0] and comp[4] == comp[3] and comp[5] == 5

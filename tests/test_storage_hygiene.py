@@ -30,9 +30,6 @@ PINNING_QUERIES = [
     "graph_kcore",
     "graph_bfs_hops",
     "dedup_connected_components",
-    # r10: the one-shot audit CC runs on a driver thread (guide §2.6
-    # overlap); its pins are recorded via a shared contextvars copy and
-    # must still be released by the wrapper on the main thread
     "graph_cc_incremental",
     # dedup/similarity pins outside the graph family
     "dedup_bloom_prefilter",
@@ -67,23 +64,27 @@ def test_back_to_back_graph_queries_leave_no_blocks(spark, sf_dir):
         assert not leaked, f"{name} leaked: {leaked}"
 
 
-def test_direct_connected_components_leaves_only_its_result_pinned(spark):
-    """A library call outside pinned_query releases the symmetrized edge
-    list and every superseded round's labels checkpoint; the returned
-    labels' own checkpoint is the only new pin, and the caller owns it."""
-    from log_agent_spark.operators.graph import connected_components
-    from log_agent_spark.scratch import _checkpoint_rdd
+def test_direct_connected_components_leaves_only_its_result_pinned(
+    spark, monkeypatch
+):
+    """A library call outside pinned_query releases the canonical edge list
+    and every superseded round's checkpoint, on both paths (union-find, and
+    the star loop forced by a 0 edge bound); the checkpoint behind the
+    returned labels is the only new pin, and the caller owns it."""
+    from log_agent_spark.operators import graph
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "id long")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (6, 7)], "src long, dst long"
     )
-    before = _persistent_ids(spark)
-    labels = connected_components(nodes, edges)
-    got = {r["node"]: r["comp"] for r in labels.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6, 7: 6}
-    leaked = _persistent_ids(spark) - before - {_checkpoint_rdd(labels).id()}
-    assert not leaked, f"connected_components leaked: {leaked}"
+    for bound in (graph._UNION_FIND_MAX_EDGES, 0):
+        monkeypatch.setattr(graph, "_UNION_FIND_MAX_EDGES", bound)
+        before = _persistent_ids(spark)
+        labels = graph.connected_components(nodes, edges)
+        got = {r["node"]: r["comp"] for r in labels.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6, 7: 6}
+        new = _persistent_ids(spark) - before
+        assert len(new) == 1, f"edge bound {bound}: new pins {new}"
 
 
 def test_no_raw_pins_in_query_modules():

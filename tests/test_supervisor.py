@@ -94,7 +94,8 @@ def test_supervise_retries_start_time_failures(spark, tmp_path, in_dir):
 
 def test_supervise_should_stop_prevents_restart(spark, tmp_path, in_dir):
     """Once the stop predicate turns true, serve returns instead of starting
-    another query — the shutdown hook the CLI's --duration relies on."""
+    another query — the shutdown hook the CLI's --duration relies on — and
+    reports the crash that left the query down, not a clean stop."""
     stopping = {"flag": False}
     started = []
 
@@ -109,7 +110,7 @@ def test_supervise_should_stop_prevents_restart(spark, tmp_path, in_dir):
         backoff_s=0.05,
         stop=lambda: stopping["flag"],
     )
-    assert outcome["q"][1] is None
+    assert isinstance(outcome["q"][1], RuntimeError)
     assert len(started) == 1  # no restart happened after the stop request
 
 
