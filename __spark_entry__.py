@@ -78,9 +78,19 @@ _MODULES = [
 # entries (q02, q07, q08, q09, q11, q14, q16, q17, q19 — driver-proven in
 # both CORRECTNESS_r10 and CORRECTNESS_r11) displaced by the nine query
 # bodies round 11 changed, which the r10 window never covered.
+# Then the four agent-demo queries over the shared logfile projection
+# (plans/ingest.logfile_rows) took the last four singles' slots
+# (sample_temperature_mixture, sql_interface, time_weighted_avg,
+# training_manifest), which go back to the backlog.
 _R11_WINDOW = [
     # canary
     "q01_pricing_summary",
+    # body-changed: ingest_tree now runs file_meta + logfile_rows, and the
+    # Kafka envelope's payload struct builds from the Connect field types
+    "ingest_logfile_tree",
+    "ingest_text_files",
+    "kafka_envelope",
+    "kafka_wire_roundtrip",
     # r11 body-changed: graph iteration fusions/pins, ER pair frame,
     # pHash replace() (ROADMAP "Recent"; none was in the r10 window)
     "er_golden_record",
@@ -136,10 +146,6 @@ _R11_WINDOW = [
     "sample_importance_weighted",
     "sample_source_mixture",
     "sample_stratified_cap",
-    "sample_temperature_mixture",
-    "sql_interface",
-    "time_weighted_avg",
-    "training_manifest",
 ]
 
 # Stable alias for tools (tools/make_coverage.py): the per-round list above

@@ -81,18 +81,18 @@ def _stream_enrich(cfg):
     delays the poll that sees the window expire, then the emitting batch
     runs), so the read is byte-sized — one partition for a normal batch,
     one job per driver-side sink — and a batch with no live file reads
-    nothing and runs no sink job. It is the backfill's read
-    (sources/binary_files.read_binary_files): the source's walk admits only
-    files it returns, zero-byte ones included, so no emitted path is lost."""
+    nothing and runs no sink job. It is the backfill's read and enrich
+    (plans/ingest.file_meta): the source's walk admits only files the read
+    returns, zero-byte ones included, so no emitted path is lost, and a row
+    sink's ``plans/ingest.logfile_rows`` gives the backfill's rows."""
     from pyspark.sql import functions as F
 
-    from log_agent_spark.sources.binary_files import enrich_file_meta, read_binary_files
+    from log_agent_spark.plans.ingest import file_meta
 
     def _t(batch):
         live = batch.filter(F.col("op") != "REMOVE")
         paths = [r.path for r in live.select("path").collect()]
-        raw = read_binary_files(batch.sparkSession, paths)
-        return cfg.transform(enrich_file_meta(raw, cfg.watch))
+        return file_meta(batch.sparkSession, paths, cfg.watch, cfg.transform)
 
     return _t
 
@@ -136,8 +136,8 @@ def main(argv: list[str] | None = None) -> int:
                 # explicitly disabled history import for this biz
                 print(f"[{cfg.name}] history_import off — skipped")
                 continue
-            # biz transform already applied inside the ingest plan
-            # (ingest_tree → bsi_parse; non-BSI paths pass through)
+            # the live path's read and biz transform (plans/ingest.file_meta),
+            # then the logfile projection the row sinks share
             df = build_batch_ingest(spark, cfg)
             if args.output:
                 out = os.path.join(args.output, _safe(cfg.name))

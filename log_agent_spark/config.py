@@ -150,17 +150,17 @@ def autoload(ini_path: str) -> list[BizConfig]:
 
 def build_batch_ingest(spark: SparkSession, cfg: BizConfig) -> DataFrame:
     """AutoInit for the backfill path (S2/S3): BizConfig → logfile rows with
-    the biz transform applied."""
+    the biz transform applied, the live path's read and enrich."""
     from log_agent_spark.plans.ingest import ingest_tree
 
-    df = ingest_tree(
+    return ingest_tree(
         spark,
         cfg.watch,
-        pattern=cfg.patterns if cfg.patterns not in ("", ".*") else None,
-        ignore=cfg.ignores or None,
-        max_nesting_level=cfg.max_nesting_level or None,
+        pattern=cfg.patterns,
+        ignore=cfg.ignores,
+        max_nesting_level=cfg.max_nesting_level,
+        transform=cfg.transform,
     )
-    return df
 
 
 def read_file_events(spark: SparkSession, cfg: BizConfig) -> DataFrame:

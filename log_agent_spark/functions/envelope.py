@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from log_agent_spark.functions.content import hex_blob
-from log_agent_spark.schemas import KAFKA_CONNECT_FIELD_TYPES, KAFKA_PAYLOAD_FIELDS
+from log_agent_spark.schemas import KAFKA_CONNECT_FIELD_TYPES
 
 # The static Connect schema half of the envelope (kafka.go:34-93): emitted
 # verbatim on every message, so it is a constant string, not a computed column.
@@ -43,29 +43,19 @@ def kafka_key(folder: Column, pack: Column, name: Column) -> Column:
     return F.concat_ws("/", folder, F.nullif(pack, F.lit("")), name)
 
 
-def payload_struct(df_cols: dict[str, Column] | None = None) -> Column:
-    """The 13-field payload struct with the reference's wire projections."""
-    c = df_cols or {name: F.col(name) for name in (
-        "file_date", "file_time", "folder", "pack", "name", "size",
-        "modify_time", "content", "compress", "compress_size", "checksum",
-        "host", "folder_time",
-    )}
+def payload_struct() -> Column:
+    """The 13-field payload struct with the reference's wire projections,
+    in the Connect schema's field order."""
     wire = {
-        "file_date": F.date_format(c["file_date"], "yyyy-MM-dd"),
-        "file_time": F.unix_millis(c["file_time"]),
-        "folder": c["folder"],
-        "pack": c["pack"],
-        "name": c["name"],
-        "size": c["size"],
-        "modify_time": F.unix_millis(c["modify_time"]),
-        "content": hex_blob(c["content"]),
-        "compress": c["compress"],
-        "compress_size": c["compress_size"],
-        "checksum": c["checksum"],
-        "host": c["host"],
-        "folder_time": F.unix_millis(c["folder_time"]),
+        "file_date": F.date_format("file_date", "yyyy-MM-dd"),
+        "file_time": F.unix_millis(F.col("file_time")),
+        "modify_time": F.unix_millis(F.col("modify_time")),
+        "content": hex_blob(F.col("content")),
+        "folder_time": F.unix_millis(F.col("folder_time")),
     }
-    return F.struct(*[wire[f].alias(f) for f in KAFKA_PAYLOAD_FIELDS])
+    return F.struct(
+        *[wire.get(f, F.col(f)).alias(f) for f in KAFKA_CONNECT_FIELD_TYPES]
+    )
 
 
 def to_kafka_records(df: DataFrame) -> DataFrame:
@@ -83,44 +73,3 @@ def to_kafka_records(df: DataFrame) -> DataFrame:
     )
     key = kafka_key(F.col("folder"), F.col("pack"), F.col("name"))
     return df.select(key.alias("key"), value.alias("value"))
-
-
-def to_kafka_records_avro(df: DataFrame, schema_id: int) -> DataFrame:
-    """(key, value) rows with the Confluent-framed AVRO body — the
-    reference's dormant schema-registry path completed (kafka.go:373-406):
-    value = 0x00 + BE32(schema_id) + avro_binary(payload), key unchanged.
-
-    The payload struct carries the same wire projections as the JSON
-    envelope (date string, epoch millis, '0x' hex content); the Avro body
-    serializes them in the record-schema field order (functions/avro.py).
-    """
-    from log_agent_spark.functions.avro import AVRO_FIELDS, avro_value
-
-    wire = payload_struct()
-    # Avro field order differs from the Connect payload order (content
-    # sits earlier) — reproject the struct to schema order for encoding.
-    ordered = F.struct(
-        *[wire.getField(name).alias(name) for name, _ in AVRO_FIELDS]
-    )
-    value = confluent_frame(schema_id, avro_value(ordered))
-    key = kafka_key(F.col("folder"), F.col("pack"), F.col("name"))
-    return df.select(key.alias("key"), value.alias("value"))
-
-
-def confluent_frame(schema_id: int, body: Column) -> Column:
-    """Confluent Schema-Registry wire framing: magic byte 0x00 + 4-byte
-    big-endian schema ID + serialized body (the encoder the reference keeps
-    live even though its Avro wiring is dormant, kafka.go:449-473: magic 0
-    at :457-459, binary.BigEndian 4-byte ID at :461-464, body appended).
-
-    Pure built-ins — unhex(lpad(hex(id), 8, '0')) materializes the 4-byte
-    big-endian integer — so the frame stays codegen'd; the body stays
-    format-agnostic (Avro, JSON bytes, ...), exactly like the reference's
-    ``[]byte`` append."""
-    if not 0 <= schema_id <= 0xFFFFFFFF:
-        raise ValueError(f"schema_id out of uint32 range: {schema_id}")
-    return F.concat(
-        F.lit(bytes([0])),
-        F.unhex(F.lpad(F.hex(F.lit(schema_id)), 8, "0")),
-        body.cast("binary"),
-    )

@@ -403,14 +403,6 @@ def _minhash_wide(docs: DataFrame, num_perms: int = NUM_PERMS) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame, num_perms: int = NUM_PERMS) -> DataFrame:
-    """(doc_id, sig: array<long>[num_perms]) — one row per doc."""
-    wide = _minhash_wide(docs, num_perms)
-    return wide.select(
-        "doc_id", F.array(*[F.col(f"mh{i}") for i in range(num_perms)]).alias("sig")
-    )
-
-
 def _band_table(
     wide: DataFrame, num_perms: int = NUM_PERMS, num_bands: int = NUM_BANDS
 ) -> DataFrame:

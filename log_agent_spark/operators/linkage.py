@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.window import Window as W
 
+from log_agent_spark.scratch import pinned_query
 from log_agent_spark.sources.tables import load_table
 
 # Evidence-feature constants shared by the Spark plan and its SQL twins —
@@ -290,6 +291,7 @@ ORDER BY rec_a, rec_b"""
 ORACLE_ER_MATCH_PAIRS = _er_pairs_sql()
 
 
+@pinned_query("er_golden_")
 def q_er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record survivorship: resolve er_match_pairs' matches into
     entities via connected components (small clusters by construction —

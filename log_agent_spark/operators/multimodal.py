@@ -9,14 +9,11 @@ bytes plus metadata — and runs per-blob Python only in Arrow-batched
 
 Spark-side plumbing is REAL (schemas, binary columns, Arrow batch iteration,
 1→N frame explode, partition-parallel); the codec layer is a STUB, because
-image/audio libs aren't in this container:
-
-- ``decode_media_meta`` / ``extract_features`` / ``sample_frames`` use a
-  clearly-marked DETERMINISTIC FAKE codec — md5-arithmetic over the blob —
-  so outputs are stable, engine-portable, and every query below has a full
-  DuckDB oracle (the fake is reproducible in ANSI SQL).
-- ``decode_image`` / ``resize_image`` are the real-codec entry points and
-  raise ``NotImplementedError`` unless PIL is importable.
+image/audio libs aren't in this container: ``decode_media_meta`` /
+``extract_features`` / ``sample_frames`` use a clearly-marked DETERMINISTIC
+FAKE codec — md5-arithmetic over the blob — so outputs are stable,
+engine-portable, and every query below has a full DuckDB oracle (the fake
+is reproducible in ANSI SQL).
 
 The fake corpus derives from the ``documents`` fixture: content = UTF-8
 bytes of ``text`` (so Spark ``md5(content)`` == DuckDB ``md5(text)``), kind
@@ -87,8 +84,8 @@ MEDIA_CORPUS_SQL = """
 
 
 # ---------------------------------------------------------------------------
-# FAKE codec (deterministic, md5-arithmetic). Clearly a stub: real decoders
-# plug in at decode_image() below when the codec libs exist.
+# FAKE codec (deterministic, md5-arithmetic). Clearly a stub: a real
+# decoder replaces these helpers when the codec libs exist.
 # ---------------------------------------------------------------------------
 def _h16(digest: str, off: int) -> int:
     return int(digest[off : off + 4], 16)
@@ -216,29 +213,6 @@ def sample_frames(
             "frame_md5 string, frame_bytes long",
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Real-codec entry points — NotImplemented until the libs exist.
-# ---------------------------------------------------------------------------
-def decode_image(blob: bytes):  # pragma: no cover - env-dependent
-    """Real image decode. STUB: PIL is not in this container."""
-    try:
-        from PIL import Image  # noqa: F401
-        import io
-
-        return Image.open(io.BytesIO(blob))
-    except ImportError as exc:
-        raise NotImplementedError(
-            "real image decode needs PIL; use decode_media_meta (fake codec) "
-            "for pipeline plumbing"
-        ) from exc
-
-
-def resize_image(blob: bytes, width: int, height: int):  # pragma: no cover
-    """Real image resize. STUB: PIL is not in this container."""
-    img = decode_image(blob)
-    return img.resize((width, height))
 
 
 # ---------------------------------------------------------------------------

@@ -86,44 +86,6 @@ def merge_rollup(
     )
 
 
-def read_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """The rollup with derived (non-additive) metrics materialized at read."""
-    r = spark.read.parquet(path)
-    return r.withColumn(
-        "avg_value", F.col("sum_value") / F.col("n_events")
-    )
-
-
-def foreach_batch_rollup(
-    path: str, day_col: str, key_cols: list[str], value_col: str
-):
-    """A ``foreachBatch`` sink that maintains the rollup exactly-once.
-
-    foreachBatch is at-least-once: after a crash between the merge and the
-    checkpoint commit, the same (batchId, data) is replayed — and an
-    additive merge would double-count. The guard is the reference's K8
-    pattern (state commit only after sink success, watchdog.go:429-436)
-    inverted into an idempotence marker: a per-batchId marker file written
-    AFTER the merge; a replayed batch that finds its marker is skipped.
-    Marker writes are O(1) metadata; at scale they live next to the rollup
-    on the same FS.
-    """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker_dir = os.path.join(path, "_batch_commits")
-        marker = os.path.join(marker_dir, str(batch_id))
-        if os.path.exists(marker):
-            return  # replayed batch, already applied
-        merge_rollup(
-            batch_df.sparkSession, batch_df, path, day_col, key_cols, value_col
-        )
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-
-    return _sink
-
-
 # ---------------------------------------------------------------------------
 # Oracle-verified form: maintain the rollup in TWO delta batches (split by
 # event_id parity), then the result must hash-match DuckDB's one-shot

@@ -1,16 +1,32 @@
-"""End-to-end batch ingest pipeline (SURVEY.md §7 Phase 1).
+"""The logfile row, for backfill and live alike (SURVEY.md §7 Phase 1).
 
-directory tree → binaryFile scan (S1-S3, F1-F5) → FileMeta enrichment (M1)
-→ BSI business transform (M2-M4) → zip explode (M5-M6) → checksum (M7)
-→ compression gate (M8) → logfile projection (M10) — the reference's whole
-per-record processing chain (watchdog.go:387-437) as ONE declarative plan.
+whole-file read (S1-S3, F1-F5) → FileMeta enrichment (M1) → biz transform
+(M2-M4) → F6 size gate → zip explode (M5-M6) → checksum (M7) → compression
+gate (M8) → logfile projection (M10) — the reference's whole per-record
+processing chain (watchdog.go:387-437) as ONE declarative plan. The
+reference runs one handler chain over live and history (``LOAD``) events
+(SURVEY §1.1); here too both modes build the row from the same two steps:
 
-Output is the 15-column ``logfile`` table (cassandra.go:333-350), written
-partitioned by ``file_date`` — mirroring the Cassandra partition key, and at
-100 TB giving date-pruned scans for every time-bounded query.
+- ``file_meta``: read a set of files and enrich them (M1-M4). The live
+  path's ``__main__._stream_enrich`` calls it on a batch's paths, the
+  backfill (``ingest_tree``) on the tree walk's.
+- ``logfile_rows``: FileMeta rows → the 15-column ``logfile`` row
+  (cassandra.go:333-350), the only builder of that row. The backfill
+  writer and the live row sinks call it; the file-copy sink takes the
+  FileMeta rows, since it copies the raw bytes (file.go:44-88).
+
+F6 is a gate of this projection: the reference skips an oversize file in
+its Cassandra sink (cassandra.go:66-69; the Kafka check is commented out,
+kafka.go:172-176), so a file-copy of the same file still ships it.
+
+The backfill output is written partitioned by ``file_date`` — mirroring the
+Cassandra partition key, and at 100 TB giving date-pruned scans for every
+time-bounded query.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,28 +34,38 @@ from pyspark.sql import functions as F
 from log_agent_spark.functions.content import apply_compression, checksum
 from log_agent_spark.functions.paths import bsi_parse
 from log_agent_spark.functions.ziputil import with_zip_members
-from log_agent_spark.sources.binary_files import enrich_file_meta, read_binary_tree
+from log_agent_spark.sources.binary_files import (
+    enrich_file_meta,
+    read_binary_files,
+    walk_tree,
+)
+
+MAX_FILE_SIZE = 16 * 1024 * 1024  # F6, cassandra.go:17-19
 
 
-def ingest_tree(
+def file_meta(
     spark: SparkSession,
+    paths: Iterable[str],
     root: str,
-    pattern: str | None = None,
-    ignore: str | None = None,
-    max_nesting_level: int | None = None,
+    transform: Callable[[DataFrame], DataFrame] = bsi_parse,
     host: str | None = None,
-    max_file_size: int = 16 * 1024 * 1024,  # F6, cassandra.go:17-19
-    reference: str = "",
 ) -> DataFrame:
-    """Directory tree → logfile rows (not yet written)."""
-    raw = read_binary_tree(
-        spark, root, pattern=pattern, ignore=ignore, max_nesting_level=max_nesting_level
-    )
-    meta = enrich_file_meta(raw, root, host=host)
-    meta = meta.filter(F.col("size") <= max_file_size)  # F6 cassandra.go:66-69
-    meta = bsi_parse(meta)  # M2-M4 (non-BSI paths pass through)
+    """Local files → FileMeta rows with the biz transform applied (M1-M4)."""
+    return transform(enrich_file_meta(read_binary_files(spark, paths), root, host))
+
+
+def logfile_rows(meta: DataFrame) -> DataFrame:
+    """FileMeta rows → logfile rows: the F6 gate, zip explode, checksum and
+    compression gate, then the 15-column projection. A transform without
+    a business time (the SPI identity) leaves ``folder_time`` NULL."""
+    meta = meta.filter(F.col("size") <= MAX_FILE_SIZE)  # F6 cassandra.go:66-69
     exploded = with_zip_members(meta)  # M5-M6
     comp = apply_compression(F.col("size"), F.col("ext"), F.col("content"))  # M8
+    folder_time = (
+        F.col("folder_time")
+        if "folder_time" in meta.columns
+        else F.lit(None).cast("timestamp")
+    )
     return exploded.select(
         F.to_date(F.col("create_time")).alias("file_date"),
         F.col("create_time").alias("file_time"),
@@ -54,9 +80,24 @@ def ingest_tree(
         comp["compress_size"],
         checksum(F.col("content")).alias("checksum"),  # over RAW content, M7
         F.col("host"),
-        F.lit(reference).alias("reference"),
-        F.col("folder_time"),
+        F.lit("").alias("reference"),
+        folder_time.alias("folder_time"),
     )
+
+
+def ingest_tree(
+    spark: SparkSession,
+    root: str,
+    pattern: str | None = None,
+    ignore: str | None = None,
+    max_nesting_level: int | None = None,
+    host: str | None = None,
+    transform: Callable[[DataFrame], DataFrame] = bsi_parse,
+) -> DataFrame:
+    """Directory tree → logfile rows (not yet written): the files of one
+    walk (F1/F2/F5), read and enriched like a live batch."""
+    paths = walk_tree(root, pattern, ignore, max_nesting_level)
+    return logfile_rows(file_meta(spark, paths, root, transform, host))
 
 
 def write_logfile(df: DataFrame, out_dir: str) -> None:

@@ -5,9 +5,9 @@ here they are StructType constants used by every source, operator and sink.
 
 Reference citations (into /root/reference/):
 - Event            → watchdog/lib/fsnotify/fsnotify.go:12-19
-- FileMeta         → watchdog/handler/handler.go:13-30
 - logfile table    → watchdog/handler/cassandra.go:333-350 (DDL, 15 columns,
-                     PRIMARY KEY (file_date, file_time, folder, pack, name))
+                     PRIMARY KEY (file_date, file_time, folder, pack, name));
+                     its row is built by plans/ingest.logfile_rows
 - Kafka envelope   → watchdog/handler/kafka.go:34-93 (schema literal),
                      kafka.go:424-438 (payload field names/order)
 """
@@ -35,73 +35,13 @@ EVENT_SCHEMA = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# The enriched record every sink receives (handler.FileMeta).
-# ---------------------------------------------------------------------------
-FILE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("filepath", T.StringType(), False),
-        T.StructField("pack", T.StringType(), True),  # '' unless zip member
-        T.StructField("sub_dir", T.StringType(), True),
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("size", T.LongType(), True),
-        T.StructField("ext", T.StringType(), True),  # lowercased
-        T.StructField("create_time", T.TimestampType(), True),
-        T.StructField("modify_time", T.TimestampType(), True),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("checksum", T.StringType(), True),  # md5 hex of raw content
-        T.StructField("compress", T.BooleanType(), True),
-        T.StructField("compress_size", T.LongType(), True),
-        T.StructField("reference", T.StringType(), True),
-        T.StructField("host", T.StringType(), True),
-        T.StructField("folder_time", T.TimestampType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
 # The durable sink table (the only relational artifact the reference emits).
 # Upsert key — cassandra.go:349.
 # ---------------------------------------------------------------------------
 LOGFILE_KEY = ["file_date", "file_time", "folder", "pack", "name"]
 
-LOGFILE_SCHEMA = T.StructType(
-    [
-        T.StructField("file_date", T.DateType(), False),
-        T.StructField("file_time", T.TimestampType(), False),  # business time
-        T.StructField("folder", T.StringType(), False),
-        T.StructField("pack", T.StringType(), False),  # '' for non-archives
-        T.StructField("name", T.StringType(), False),
-        T.StructField("size", T.LongType(), True),
-        T.StructField("modify_time", T.TimestampType(), True),
-        T.StructField("upload_time", T.TimestampType(), True),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("compress", T.BooleanType(), True),
-        T.StructField("compress_size", T.LongType(), True),
-        T.StructField("checksum", T.StringType(), True),
-        T.StructField("host", T.StringType(), True),
-        T.StructField("reference", T.StringType(), True),
-        T.StructField("folder_time", T.TimestampType(), True),
-    ]
-)
-
-# Kafka-Connect-style JSON envelope payload field order (kafka.go:424-438).
-# Serialization must keep this exact order and name set.
-KAFKA_PAYLOAD_FIELDS = [
-    "file_date",      # yyyy-MM-dd string            (kafka.go:331)
-    "file_time",      # epoch millis int64           (kafka.go:332)
-    "folder",
-    "pack",
-    "name",
-    "size",
-    "modify_time",    # epoch millis int64           (kafka.go:337)
-    "content",        # '0x' + lowercase hex, empty → '0x' (kafka.go:323-325)
-    "compress",
-    "compress_size",
-    "checksum",
-    "host",
-    "folder_time",    # epoch millis int64           (kafka.go:342)
-]
-
-# The static Connect schema literal (kafka.go:34-93): field name → connect type.
+# The static Connect schema literal (kafka.go:34-93): field name → connect
+# type, in the payload's field order (kafka.go:424-438).
 KAFKA_CONNECT_FIELD_TYPES = {
     "file_date": "string",
     "file_time": "int64",
@@ -117,15 +57,6 @@ KAFKA_CONNECT_FIELD_TYPES = {
     "host": "string",
     "folder_time": "int64",
 }
-
-# Zip-explode output element (functions/ziputil.py): one archive member.
-ZIP_ENTRY_SCHEMA = T.StructType(
-    [
-        T.StructField("entry_name", T.StringType(), False),
-        T.StructField("entry_size", T.LongType(), False),
-        T.StructField("entry_content", T.BinaryType(), True),
-    ]
-)
 
 # Incremental-processing state (BadgerDB path→mtime analog, SURVEY §2.3 T4).
 STATE_SCHEMA = T.StructType(

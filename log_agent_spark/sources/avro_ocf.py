@@ -18,10 +18,9 @@ Wire format (spec §"Object Container Files"):
     block   = record-count (zigzag varint) + byte-size (zigzag varint)
             + serialized records (deflate = RFC1951 raw, no zlib header)
             + sync marker
-The binary record encoding is the one already proven byte-level for the
-Kafka M14 body (functions/avro.py, goavro-compatible): zigzag varints,
-length-prefixed UTF-8, single-byte booleans; unions encode the branch
-index first.
+Records use the Avro binary encoding (spec §"Binary Encoding"): zigzag
+varints, length-prefixed UTF-8, single-byte booleans; unions encode the
+branch index first.
 
 Type coverage: string/long/int/double/float/boolean/bytes, nullable
 unions ["null", T], arrays of primitives, and the logical types

@@ -6,8 +6,12 @@ process → multi-sink → state commit — as one Structured Streaming query:
     readStream (file events, per-path debounce T1 in the source —
                 sources/file_events_stream.py)
       → foreachBatch:
-            enrich/transform (M1-M10, same plan as batch ingest)
-            MultiSink fan-out (K6 priority order, fail-fast)
+            transform — the agent's reads the batch's files, enriches
+              them and applies the biz transform (M1-M4,
+              plans/ingest.file_meta, the backfill's own)
+            MultiSink fan-out (K6 priority order, fail-fast); a sink that
+              takes logfile rows applies plans/ingest.logfile_rows
+              (M5-M10), the backfill writer's projection
         # checkpoint commit AFTER foreachBatch success = K8 ordering, free
 
 The query keeps no operator state: the source's offset (the settled

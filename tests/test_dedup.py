@@ -21,11 +21,11 @@ def test_exact_finds_all_planted(spark, sf_dir):
 
 
 def test_minhash_identical_texts_identical_sigs(spark, sf_dir):
-    sig = dedup.minhash_signatures(_docs(spark, sf_dir))
+    sig = dedup._minhash_wide(_docs(spark, sf_dir))
     pair = sig.filter(F.col("doc_id").isin(7, 1_000_007)).collect()
-    sigs = {r.doc_id: list(r.sig) for r in pair}
+    sigs = {r.doc_id: [r[f"mh{i}"] for i in range(dedup.NUM_PERMS)] for r in pair}
     assert sigs[7] == sigs[1_000_007]
-    assert len(sigs[7]) == dedup.NUM_PERMS
+    assert sig.columns == ["doc_id"] + [f"mh{i}" for i in range(dedup.NUM_PERMS)]
 
 
 def test_lsh_candidates_cover_exact_dups(spark, sf_dir):

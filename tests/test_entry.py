@@ -44,11 +44,20 @@ def test_driver_window_invariants():
 
 
 def test_all_queries_run_smoke(spark, sf_dir):
-    """Every declared query must at least plan + execute at sf0.001."""
+    """Every declared query must at least plan + execute at sf0.001, and
+    leave no storage pinned in the caller's session once it has run."""
+    from log_agent_spark.scratch import _persistent_ids
+
+    leaks = {}
     for name, fn in entrymod.queries().items():
+        before = _persistent_ids(spark)
         df = fn(spark, sf_dir)
         n = df.limit(5).count()
         assert n >= 0, name
+        pinned = _persistent_ids(spark) - before
+        if pinned:
+            leaks[name] = len(pinned)
+    assert not leaks, f"queries that leave storage pinned: {leaks}"
 
 
 def test_no_driver_hostile_output_columns(spark, sf_dir):

@@ -228,52 +228,6 @@ def test_kafka_key_skips_empty_pack(meta_df):
     assert key2 == "BSI/arc.zip/log1.txt"
 
 
-def test_avro_value_bytes(meta_df):
-    """M14 Avro body golden (kafka.go:373-406 dormant path, completed):
-    byte-for-byte against an independently hand-encoded record — zigzag
-    varints and UTF-8 strings in the kafka.go:34-93 field order — then
-    the full Confluent frame (magic 0 + BE32 id + body)."""
-    # Hand-derived for the meta_df fixture row (see functions/avro.py for
-    # the encoding rules): e.g. '\x14' = zigzag(10) = len("2017-06-07"),
-    # '\x9a\xeb\xb8\xb5\x90W' = zigzag-varint(1496852142797).
-    expected_body = (
-        b"\x142017-06-07\x9a\xeb\xb8\xb5\x90W\x06BSI\x00\x10log1.txt"
-        b"\x16\xb0\xee\xb8\xb5\x90W00x68656c6c6f20776f726c64\x00\x16"
-        b"@5eb63bbbe01eeed093cb22bb8f5acdc3\x0chost01\x9a\xeb\xb8\xb5\x90W"
-    )
-    row = E.to_kafka_records_avro(meta_df, schema_id=42).collect()[0]
-    assert bytes(row.value) == b"\x00\x00\x00\x00\x2a" + expected_body
-    assert row.key == "BSI/log1.txt"
-
-
-def test_avro_zigzag_edge_cases():
-    """Varint edges: zero, negatives, boundaries — matches the Avro spec
-    examples (0→00, -1→01, 1→02, -64→7f, 64→80 01)."""
-    from log_agent_spark.functions.avro import _zigzag_varint
-
-    assert _zigzag_varint(0) == b"\x00"
-    assert _zigzag_varint(-1) == b"\x01"
-    assert _zigzag_varint(1) == b"\x02"
-    assert _zigzag_varint(-64) == b"\x7f"
-    assert _zigzag_varint(64) == b"\x80\x01"
-    assert _zigzag_varint(-(2**63)) == b"\xff" * 9 + b"\x01"
-    assert _zigzag_varint(2**63 - 1) == b"\xfe" + b"\xff" * 8 + b"\x01"
-
-
-def test_confluent_frame_bytes(spark):
-    """Wire framing golden (kafka.go:449-473): magic 0x00 + 4-byte
-    big-endian schema ID + body, byte-for-byte."""
-    df = spark.createDataFrame([(b"abc",)], "body binary")
-    out = df.select(
-        E.confluent_frame(7, F.col("body")).alias("lo"),
-        E.confluent_frame(0x01020304, F.col("body")).alias("hi"),
-        E.confluent_frame(0, F.lit(b"")).alias("empty"),
-    ).collect()[0]
-    assert bytes(out.lo) == b"\x00\x00\x00\x00\x07abc"
-    assert bytes(out.hi) == b"\x00\x01\x02\x03\x04abc"
-    assert bytes(out.empty) == b"\x00\x00\x00\x00\x00"
-
-
 def test_bsi_parse_directory_segment_window(spark):
     """BSI conformance counts DIRECTORY segments, not path segments: the
     reference splits FileMeta.SubDir (no filename, watchdog/watchdog.go:347)

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from log_agent_spark.operators import multimodal as mm
@@ -64,11 +63,6 @@ def test_frame_sample_one_to_n(spark, sf_dir):
         assert r.mx == r.n - 1  # contiguous frame indices from 0
     ts = frames.filter(F.col("frame_idx") == 2).select("frame_ts_ms").first()
     assert ts.frame_ts_ms == 2 * mm.FRAME_EVERY_MS
-
-
-def test_real_codec_stub_raises():
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"\x89PNG")
 
 
 # ---------------------------------------------------------------------------

@@ -183,6 +183,14 @@ def test_file_deleted_inside_its_window_leaves_query_running(spark, tmp_path):
         (watch / "rotated.log").unlink()
         while time.time() < deadline and q.isActive and not (dest / "keep.log").exists():
             time.sleep(0.5)
+        # the sink writes inside the batch; its progress is reported after
+        # the batch commits
+        while (
+            time.time() < deadline
+            and q.isActive
+            and not any(p["numInputRows"] for p in q.recentProgress)
+        ):
+            time.sleep(0.1)
         assert q.isActive, q.exception()
         assert (dest / "keep.log").read_bytes() == b"kept"
         assert not (dest / "rotated.log").exists()

@@ -15,7 +15,9 @@ module import). Edges:
 
 A new module lands with a caller, or in ``ALLOWED`` with a reason that
 names the ROADMAP item that will wire it. An allowlisted module that has
-become reachable fails too, so the list only shrinks.
+become reachable fails too, so the list only shrinks. The same rule holds
+one level down: a public top-level def or class needs a caller outside
+the tests, or an ``ALLOWED_DEFS`` reason.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import glob
 import importlib.util
 import os
 import re
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "log_agent_spark"
@@ -43,10 +46,10 @@ ROOTS = [
 # module -> why it stays without a caller (each names the ROADMAP item that wires it)
 ALLOWED = {
     "log_agent_spark.sinks.kafka":
-        "ROADMAP direction 4 wires the ini-driven [KAFKA] sink chain into "
+        "ROADMAP direction 2 wires the ini-driven [KAFKA] sink chain into "
         "the agent",
     "log_agent_spark.sources.incremental":
-        "ROADMAP direction 4 wires the (path, mtime) state into backfill, "
+        "ROADMAP direction 2 wires the (path, mtime) state into backfill, "
         "committed after the sinks",
 }
 
@@ -132,4 +135,85 @@ def test_every_module_is_reachable_from_an_entry_point():
     assert not stale, (
         "allowlisted modules that are now reachable or gone - drop them "
         f"from ALLOWED: {stale}"
+    )
+
+
+# "module.def" -> why it stays without a non-test caller (each names the
+# ROADMAP direction that wires it)
+ALLOWED_DEFS = {
+    "log_agent_spark.sources.incremental.read_state":
+        "ROADMAP direction 2 wires the (path, mtime) state into backfill",
+    "log_agent_spark.sources.incremental.delta_since":
+        "ROADMAP direction 2 wires the (path, mtime) state into backfill",
+    "log_agent_spark.sources.incremental.commit_state":
+        "ROADMAP direction 2 commits the (path, mtime) state after the sinks",
+    "log_agent_spark.sinks.kafka.kafka_sink":
+        "ROADMAP direction 2 wires the ini-driven [KAFKA] sink",
+    "log_agent_spark.streaming.metrics.observed":
+        "ROADMAP direction 3 builds the per-batch record on it",
+}
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as fh:
+        return ast.parse(fh.read(), filename=path)
+
+
+def _used_names(tree: ast.AST) -> Counter:
+    """How often ``tree`` reads each identifier: names, attributes and
+    imported names."""
+    used: Counter = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            used[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            used[node.name.rpartition(".")[2]] += 1
+    return used
+
+
+def test_every_public_def_has_a_caller_outside_tests():
+    """A public top-level def or class of a reached or allowlisted module
+    must be read by an entry point or a reached module, or be in
+    ``ALLOWED_DEFS``. A read counts in the def's own module outside its own
+    body, and in a file that imports that module; names match by
+    identifier, so the audit can miss an orphan that shares a name with
+    something such a file reads, but never fails a def that has a
+    caller."""
+    mods = _package_modules()
+    by_path = {p: m for m, p in mods.items()}
+    reached = reachable_modules()
+    sources = {os.path.join(REPO, r) for r in ROOTS} | {mods[m] for m in reached}
+    reads = {
+        path: (_referenced_names(path, by_path.get(path)), _used_names(_parse(path)))
+        for path in sources
+    }
+
+    orphans = []
+    for module in sorted(reached | set(ALLOWED)):
+        path = mods[module]
+        for node in _parse(path).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or node.name.startswith("_"):
+                continue
+            callers = 0
+            for src, (imports, used) in reads.items():
+                if src == path:  # a read inside its own body is recursion
+                    callers += used[node.name] - _used_names(node)[node.name]
+                elif module in imports:
+                    callers += used[node.name]
+            if callers <= 0:
+                orphans.append(f"{module}.{node.name}")
+    missing = sorted(set(orphans) - set(ALLOWED_DEFS))
+    assert not missing, (
+        "public defs that only tests call - give each a caller, delete it, "
+        "or allowlist it in ALLOWED_DEFS with the ROADMAP direction that "
+        "wires it:\n" + "\n".join(missing)
+    )
+    stale = sorted(set(ALLOWED_DEFS) - set(orphans))
+    assert not stale, (
+        f"allowlisted defs that now have a caller or are gone - drop them "
+        f"from ALLOWED_DEFS: {stale}"
     )

@@ -1,16 +1,21 @@
 """The live path's per-batch read (``__main__._stream_enrich`` over
-``sources/binary_files.read_binary_files``): vanished files are skipped,
-empty files are shipped, no Spark job lists a batch, and the sink chain
-runs one job per driver-side sink for a small batch and none for an empty
-one."""
+``plans/ingest.file_meta``): vanished files are skipped, empty files are
+shipped, no Spark job lists a batch, the sink chain runs one job per
+driver-side sink for a small batch and none for an empty one, and a live
+batch's logfile rows are the backfill's."""
 
 from __future__ import annotations
 
+import datetime as dt
 import itertools
 import os
 
+import pytest
+
 from log_agent_spark.__main__ import _stream_enrich
-from log_agent_spark.config import BizConfig
+from log_agent_spark.config import BizConfig, build_batch_ingest
+from log_agent_spark.plans.agentdemo import build_fixture_tree
+from log_agent_spark.plans.ingest import MAX_FILE_SIZE, logfile_rows
 from log_agent_spark.sinks.filecopy import file_copy_sink
 from log_agent_spark.sinks.multi import MultiSink, Sink, console_sink
 from log_agent_spark.sources import binary_files
@@ -155,3 +160,42 @@ def test_sink_chain_job_shape(spark, tmp_path):
     finally:
         spark.conf.set(key, prev)
 
+
+
+@pytest.mark.parametrize("biz", ["BSI.T", "SPI.T"])
+def test_backfill_and_live_build_the_same_logfile_rows(spark, tmp_path, biz):
+    """One tree through ``build_batch_ingest`` and through a live batch
+    (``logfile_rows`` over ``_stream_enrich``) gives the same rows apart
+    from ``upload_time``, with the section's transform in both: BSI takes
+    file_time from the test-id folder, SPI keeps the file's mtime. The tree
+    holds BSI directories, a zip with a GBK-named member, empty files, a
+    gzipped 2 KB log, a jpg and a file one byte over the F6 gate."""
+    tree = tmp_path / "tree"
+    build_fixture_tree(str(tree))
+    (tree / "flat" / "oversize.log").write_bytes(b"o" * (MAX_FILE_SIZE + 1))
+    cfg = BizConfig(name=biz, watch=str(tree))
+    paths = sorted(binary_files.walk_tree(str(tree)))
+
+    def rows(df):
+        return sorted(
+            (r.asDict() for r in df.drop("upload_time").collect()),
+            key=lambda r: (r["folder"], r["pack"], r["name"]),
+        )
+
+    backfill = rows(build_batch_ingest(spark, cfg))
+    live = rows(logfile_rows(_stream_enrich(cfg)(_batch(spark, paths))))
+    assert backfill == live
+
+    names = {(r["pack"], r["name"]) for r in live}
+    assert ("", "oversize.log") not in names
+    assert {("FLOWLOG.zip", "中文名.txt"), ("", "empty.dat"), ("", "photo.jpg")} <= names
+    big = next(r for r in live if r["name"] == "big.log")
+    assert big["compress"] and big["size"] == 2400
+    assert not next(r for r in live if r["name"] == "photo.jpg")["compress"]
+    folder_time = dt.datetime(2017, 6, 7, 16, 15, 42, 797000)
+    file_times = {r["file_time"] for r in live if r["folder"].startswith("LOUP")}
+    if biz == "BSI.T":
+        assert file_times == {folder_time}
+    else:
+        assert folder_time not in file_times
+        assert {r["folder_time"] for r in live} == {None}

@@ -1,8 +1,10 @@
 """Composed end-to-end streaming soak (VERDICT r8 stretch 7): the full hot
 path — real files landed into a watch tree → the ``file_events`` source
-with its per-path debounce (T1, one row per settled path — T3) → enrich to
-logfile shape (M1-M12) → multi-sink fan-out (K6) with the keyed parquet
-UPSERT (K2) and the broker-free Kafka-RECORD sink (K1 envelope) — run for
+with its per-path debounce (T1, one row per settled path — T3) → the
+agent's own per-batch read and enrich (``__main__._stream_enrich``, M1-M4,
+reading the landed files) → multi-sink fan-out (K6) with the keyed parquet
+UPSERT (K2) and the broker-free Kafka-RECORD sink (K1 envelope), each over
+the backfill's logfile projection (``plans/ingest.logfile_rows``) — run for
 ~100+ micro-batches under the agent's own run loop
 (``streaming/supervisor.serve``, the S4 watcher guard), with the
 BatchMetricsListener (watchdog.go:309 parity) capturing per-batch latency.
@@ -93,39 +95,17 @@ def _offset_entries(ckpt: str) -> int | None:
         return len(json.loads(f.read().splitlines()[2])["files"])
 
 
-def _enrich(df):
-    """Raw event → 13-column logfile row (the M1-M10 projection, minimal)."""
-    from pyspark.sql import functions as F
-
-    raw = F.encode("path", "UTF-8")
-    return df.select(
-        F.to_date("ts").alias("file_date"),
-        F.date_trunc("second", "ts").alias("file_time"),
-        F.regexp_extract("path", r"^(.*)/[^/]+$", 1).alias("folder"),
-        F.lit("").alias("pack"),
-        F.regexp_extract("path", r"([^/]+)$", 1).alias("name"),
-        F.length("path").cast("long").alias("size"),
-        F.col("mod_time").alias("modify_time"),
-        raw.alias("content"),
-        F.lit(False).alias("compress"),
-        F.length("path").cast("long").alias("compress_size"),
-        F.md5(raw).alias("checksum"),
-        F.lit("soak-host").alias("host"),
-        F.col("ts").alias("folder_time"),
-    )
-
-
 def main() -> int:
     waves = N_WAVES
     if "--waves" in sys.argv[1:]:
         waves = int(sys.argv[sys.argv.index("--waves") + 1])
         globals()["N_WAVES"] = waves
 
-    from pyspark.sql import functions as F
-
     import __spark_entry__  # noqa: F401 — path setup parity with the tools
+    from log_agent_spark.__main__ import _stream_enrich
     from log_agent_spark.config import BizConfig, read_file_events
     from log_agent_spark.functions.envelope import to_kafka_records
+    from log_agent_spark.plans.ingest import logfile_rows
     from log_agent_spark.session import get_spark
     from log_agent_spark.sinks.multi import MultiSink, Sink
     from log_agent_spark.sinks.upsert import upsert_parquet
@@ -160,10 +140,10 @@ def main() -> int:
                 sum(1 for b in listener.batches if b.num_input_rows > 0)
             )
             raise RuntimeError("injected mid-soak fault (K2 sink crash)")
-        upsert_parquet(spark, _enrich(df), table_dir)
+        upsert_parquet(spark, logfile_rows(df), table_dir)
 
     def records_write(df):
-        to_kafka_records(_enrich(df)).write.mode("append").parquet(records_dir)
+        to_kafka_records(logfile_rows(df)).write.mode("append").parquet(records_dir)
 
     chain = MultiSink(
         [
@@ -180,6 +160,7 @@ def main() -> int:
         return run_event_pipeline(
             read_file_events(spark, cfg),
             chain,
+            transform=_stream_enrich(cfg),
             checkpoint_dir=ckpt,
             trigger="200 milliseconds",
         )
@@ -315,8 +296,10 @@ def main() -> int:
         "# SOAK — standing-pipeline endurance (tools/soak.py)",
         "",
         "Full hot path (real files → file_events source with its per-path",
-        "debounce T1 → enrich → MultiSink K6 with the K2 parquet upsert and",
-        "the K1 broker-free kafka-record sink) under the S4 supervisor, "
+        "debounce T1 → the agent's read and enrich (`_stream_enrich`) →",
+        "MultiSink K6 with the K2 parquet upsert and the K1 broker-free",
+        "kafka-record sink, both over the backfill's `logfile_rows`",
+        "projection) under the S4 supervisor, "
         f"{N_WAVES} waves of {PATHS_PER_WAVE} files, one micro-batch each.",
         "",
         "| gate | value | verdict |",
