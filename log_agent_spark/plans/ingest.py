@@ -26,9 +26,10 @@ time-bounded query.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_agent_spark.functions.content import apply_compression, checksum
@@ -58,15 +59,19 @@ def logfile_rows(meta: DataFrame) -> DataFrame:
     """FileMeta rows → logfile rows: the F6 gate, zip explode, checksum and
     compression gate, then the 15-column projection. A transform without
     a business time (the SPI identity) leaves ``folder_time`` NULL."""
-    meta = meta.filter(F.col("size") <= MAX_FILE_SIZE)  # F6 cassandra.go:66-69
-    exploded = with_zip_members(meta)  # M5-M6
+    gate, projection = _logfile_columns("folder_time" in meta.columns)
+    return with_zip_members(meta.filter(gate)).select(*projection)  # M5-M6
+
+
+@functools.lru_cache(maxsize=2)
+def _logfile_columns(has_folder_time: bool) -> tuple[Column, tuple[Column, ...]]:
+    """logfile_rows' F6 gate and projection, built once per transform shape:
+    the expressions are unresolved and session-free, and rebuilding them
+    took about 420 py4j calls, two thirds of a backfill pass's plan (each
+    use still gets fresh expression ids)."""
     comp = apply_compression(F.col("size"), F.col("ext"), F.col("content"))  # M8
-    folder_time = (
-        F.col("folder_time")
-        if "folder_time" in meta.columns
-        else F.lit(None).cast("timestamp")
-    )
-    return exploded.select(
+    folder_time = F.col("folder_time") if has_folder_time else F.lit(None).cast("timestamp")
+    return F.col("size") <= MAX_FILE_SIZE, (  # F6 cassandra.go:66-69
         F.to_date(F.col("create_time")).alias("file_date"),
         F.col("create_time").alias("file_time"),
         F.col("folder"),

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import datetime as dt
 import functools
+import json
 import math
 import os
 import re
@@ -33,6 +34,7 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     LongType,
     StringType,
@@ -168,8 +170,13 @@ def read_binary_files(spark: SparkSession, paths: Iterable[str]) -> DataFrame:
     - Spark's file index drops ZERO-byte files, but the reference ships them
       (content "0x" on the wire, kafka.go:323-325): only the non-empty files
       are read, and the empty ones are unioned as metadata-only rows
-      (content = x'') built from the stat, only when there are any.
-    - The paths are literal: a glob character in a file name matches itself.
+      (content = x'') built from the stat, only when there are any. They
+      are literals in the plan, not an RDD of driver data, so reading them
+      starts no Python worker.
+    - The paths are literal: each glob character in a name is
+      backslash-escaped, so the load's glob expansion matches that one
+      file. The path list crosses py4j in one call, so building the read
+      costs the same for 5 files as for 50.
     - The scan is coalesced by the files' bytes (``coalesce_by_bytes``):
       each driver-side consumer (toLocalIterator, show) runs one job per
       partition, and split by openCostInBytes a few small files would
@@ -196,29 +203,53 @@ def _read_stated(spark: SparkSession, stats: dict[str, tuple[int, int]]) -> Data
         return spark.range(0).select(
             *(F.lit(None).cast(f.dataType).alias(f.name) for f in BINARY_FILE_SCHEMA)
         )
-    full = [p for p, (_, size) in stats.items() if size]
+    full = [_glob_escape(p) for p, (_, size) in stats.items() if size]
     empties = [  # binaryFile's form: file: + absolute path, a millisecond mtime
-        (f"file:{p}", dt.datetime.fromtimestamp(mtime_ns // 10**6 / 1000, dt.timezone.utc), 0, b"")
+        {
+            "path": f"file:{p}",
+            "modificationTime": (
+                _EPOCH + dt.timedelta(milliseconds=mtime_ns // 10**6)
+            ).isoformat(timespec="milliseconds"),
+            "length": 0,
+            "content": "",  # base64 of no bytes
+        }
         for p, (mtime_ns, size) in stats.items()
         if not size
     ]
     df = None
     if full:
-        df = (
+        reader = (
             spark.read.format("binaryFile")
             .option("ignoreMissingFiles", "true")
-            .option("__globPaths__", "false")  # DataSource.GLOB_PATHS_KEY
             # the checksum file system builds a `.name.crc` sibling path,
             # which fails on a `:` in the name (URISyntaxException); the raw
             # local file system reads the file itself, for this load only
             .option("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
             .option("fs.file.impl.disable.cache", "true")
-            .load(full)
         )
+        # one py4j call for the whole path list (a Python list crosses one
+        # call per element): NUL joins them, as no POSIX path holds it
+        jpaths = spark._jvm.java.util.regex.Pattern.compile("\0").split("\0".join(full))
+        df = DataFrame(reader._jreader.load(jpaths), spark)
     if empties:
-        rows = spark.createDataFrame(empties, BINARY_FILE_SCHEMA)
+        # one JSON literal in the plan, not an RDD of driver data: an RDD
+        # starts a Python worker for each of its slices
+        rows = spark.range(1, numPartitions=1).select(
+            F.inline(F.from_json(F.lit(json.dumps(empties)), ArrayType(BINARY_FILE_SCHEMA)))
+        )
         df = rows if df is None else df.unionByName(rows)
     return coalesce_by_bytes(df, sum(size for _, size in stats.values()))
+
+
+_EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+
+
+def _glob_escape(path: str) -> str:
+    """``path`` with Hadoop's glob characters backslash-escaped, so that
+    the load's glob expansion matches the file of that literal name (with
+    expansion off, Spark 4.1.2 lists every path once more for each one
+    that looks like a glob)."""
+    return re.sub(r"([\\\[\]{}*?])", r"\\\1", path)
 
 
 def _stat_files(paths: Iterable[str]) -> dict[str, tuple[int, int]]:

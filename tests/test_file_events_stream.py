@@ -8,9 +8,11 @@ import os
 import re
 import time
 import uuid
+from collections import Counter
 
 import pytest
 
+from log_agent_spark.plans.ingest import ingest_tree
 from log_agent_spark.sources import file_events_stream as fes
 from log_agent_spark.sources.binary_files import read_binary_files, read_binary_tree, walk_tree
 from log_agent_spark.sources.file_events_stream import (
@@ -55,9 +57,9 @@ def test_diff_size_change_with_same_mtime_is_a_write():
 
 def test_backfill_and_live_ship_the_same_files(spark, tmp_path):
     """One tree, every filter: the backfill read, the live source's walk
-    and the live read of what the walk emits give one path set, so no
-    emitted path is lost by the read (a glob character or a `:` in a name,
-    too)."""
+    and the live read of what the walk emits give each path once, so no
+    emitted path is lost or repeated by the read (a glob character or a
+    `:` in a name, too)."""
     root = tmp_path / "tree"
     for rel in (
         "a.log", "b.txt", "c[1].log", "e:f.log", ".hidden.log", "_under.log", "x.log._COPYING_",
@@ -79,7 +81,7 @@ def test_backfill_and_live_ship_the_same_files(spark, tmp_path):
     ]
 
     def rel(paths):
-        return {p.removeprefix("file:").removeprefix(f"{root}/") for p in paths}
+        return Counter(p.removeprefix("file:").removeprefix(f"{root}/") for p in paths)
 
     for case, expected in cases:
         backfill = rel(r.path for r in read_binary_tree(spark, str(root), **case).collect())
@@ -87,7 +89,19 @@ def test_backfill_and_live_ship_the_same_files(spark, tmp_path):
         rows, _ = FileEventsStreamReader(options).read({"files": {}})
         emitted = sorted(r[0] for r in rows)
         live = rel(r.path for r in read_binary_files(spark, emitted).collect())
-        assert backfill == rel(emitted) == live == expected, case
+        assert backfill == rel(emitted) == live == Counter(expected), case
+
+
+def test_glob_character_names_give_one_row_each(spark, tmp_path):
+    """A name holding a glob character is read as itself, once: the load
+    neither expands it nor lists the other paths again."""
+    names = ["a.log", "b[1].log", "c\\d.log", "{x}.log"]
+    for name in names:
+        (tmp_path / name).write_bytes(name.encode())  # a row's content names its file
+    backfill = Counter(bytes(r.content).decode() for r in ingest_tree(spark, str(tmp_path)).collect())
+    paths = sorted(walk_tree(str(tmp_path)))
+    live = Counter(bytes(r.content).decode() for r in read_binary_files(spark, paths).collect())
+    assert backfill == live == Counter(names)
 
 
 # ---------------------------------------------------------------------------

@@ -10,12 +10,15 @@ import datetime as dt
 import itertools
 import os
 
+import py4j.clientserver
+import py4j.java_gateway
+import py4j.protocol
 import pytest
 
 from log_agent_spark.__main__ import _stream_enrich
 from log_agent_spark.config import BizConfig, build_batch_ingest
 from log_agent_spark.plans.agentdemo import build_fixture_tree
-from log_agent_spark.plans.ingest import MAX_FILE_SIZE, logfile_rows
+from log_agent_spark.plans.ingest import MAX_FILE_SIZE, file_meta, logfile_rows
 from log_agent_spark.sinks.filecopy import file_copy_sink
 from log_agent_spark.sinks.multi import MultiSink, Sink, console_sink
 from log_agent_spark.sources import binary_files
@@ -63,22 +66,23 @@ def test_vanished_path_is_skipped_not_fatal(spark, tmp_path):
 
 def test_path_vanishing_after_the_stat_is_skipped(spark, tmp_path, monkeypatch):
     """A path that passes the stat but is gone by the listing is stat-ed
-    again and skipped."""
+    again and skipped (a glob-escaped name too)."""
     present = tmp_path / "a.log"
     present.write_bytes(b"alpha")
-    gone = str(tmp_path / "gone.log")
     real = binary_files._stat_files
-    calls = []
+    for name in ("gone.log", "gone[1].log"):
+        gone = str(tmp_path / name)
+        calls = []
 
-    def stale_first(paths):
-        calls.append(list(paths))
-        stats = real(paths)
-        return {**stats, gone: (0, 3)} if len(calls) == 1 else stats
+        def stale_first(paths):
+            calls.append(list(paths))
+            stats = real(paths)
+            return {**stats, gone: (0, 3)} if len(calls) == 1 else stats
 
-    monkeypatch.setattr(binary_files, "_stat_files", stale_first)
-    rows = binary_files.read_binary_files(spark, [str(present), gone]).collect()
-    assert [r.path.removeprefix("file:") for r in rows] == [str(present)]
-    assert len(calls) == 2
+        monkeypatch.setattr(binary_files, "_stat_files", stale_first)
+        rows = binary_files.read_binary_files(spark, [str(present), gone]).collect()
+        assert [r.path.removeprefix("file:") for r in rows] == [str(present)], name
+        assert len(calls) == 2, name
 
 
 def test_zero_byte_file_is_shipped(spark, tmp_path):
@@ -103,6 +107,47 @@ def test_zero_byte_file_is_shipped(spark, tmp_path):
     file_copy_sink(str(dest)).write(frame)
     assert (dest / "empty.log").read_bytes() == b""
     assert round((dest / "empty.log").stat().st_mtime_ns / 1e6) == mtime_ns // 1_000_000
+
+
+def test_zero_byte_rows_run_no_python_worker(spark, tmp_path):
+    """The zero-byte rows are literals in the plan: reading them starts no
+    Python worker (an RDD of driver data runs one per slice)."""
+    (tmp_path / "empty.log").write_bytes(b"")
+    (tmp_path / "full.log").write_bytes(b"x")
+    paths = [str(tmp_path / "empty.log"), str(tmp_path / "full.log")]
+    df = binary_files.read_binary_files(spark, paths)
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert sorted((r.length, bytes(r.content)) for r in df.collect()) == [(0, b""), (1, b"x")]
+
+
+def test_plan_construction_calls_are_flat_in_file_count(spark, tmp_path, monkeypatch):
+    """Building the read and the logfile rows crosses py4j as often for 50
+    files as for 5: the path list goes to the JVM in one call. Reference
+    releases, sent whenever Python collects a JVM object's proxy, are not
+    counted."""
+    calls = []
+
+    def count(n):
+        tree = tmp_path / str(n)
+        tree.mkdir()
+        (tree / "empty.log").write_bytes(b"")
+        paths = [str(tree / "empty.log")]
+        for i in range(n):
+            (tree / f"f{i}.log").write_bytes(b"x" * (i + 1))
+            paths.append(str(tree / f"f{i}.log"))
+        logfile_rows(file_meta(spark, paths, str(tree)))  # warm the column caches
+        calls.clear()
+        logfile_rows(file_meta(spark, paths, str(tree)))
+        return len(calls)
+
+    for conn in (py4j.clientserver.ClientServerConnection, py4j.java_gateway.GatewayConnection):
+        def send(self, command, *args, _send=conn.send_command, **kwargs):
+            if not command.startswith(py4j.protocol.MEMORY_COMMAND_NAME):
+                calls.append(command)
+            return _send(self, command, *args, **kwargs)
+
+        monkeypatch.setattr(conn, "send_command", send)
+    assert count(5) == count(50) > 0
 
 
 def test_large_batch_is_listed_without_a_job(spark, tmp_path):
